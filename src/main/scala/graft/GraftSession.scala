@@ -33,11 +33,12 @@ object GraftSession {
     // wall-neutral at sf0.1, but the paired ABBA re-run at sf25 priced
     // the CPU+width cost where shuffles are big enough to matter:
     // sql_q5_local_supplier 9.2 → 18.0 s (1.95×), join_semi_exists
-    // 13.2 → 15.3 s, 5-entry set 1.17× (tools.CodecProbe, warm legs).
+    // 13.2 → 15.3 s, 5-entry set 1.17× (paired warm process legs).
     // The byte cut is a genuine network-bound-cluster lever, so the
-    // conf stays overridable per process (sys.props fallback is what
-    // tools.CodecProbe's paired A/B legs set) — but the default must
-    // not tax the measured CPU-bound posture for an unmeasured one.
+    // conf stays overridable per process (sys.props fallback is what a
+    // tools.StageProbe codec leg sets through
+    // SPARK_GRAFT_EXTRA_JAVA_OPTS) — but the default must not tax the
+    // measured CPU-bound posture for an unmeasured one.
     .config("spark.io.compression.codec",
       sys.props.getOrElse("spark.io.compression.codec", "lz4"))
     .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)

@@ -20,14 +20,10 @@ object Tables {
     // Fixtures are immutable driver-generated data (the cachedCount
     // contract below), so the memo can never go stale within a run;
     // anything mutable must use spark.read.parquet directly.
-    if (!schemaCacheEnabled) return spark.read.parquet(path)
     val schema = schemaCache.computeIfAbsent(path,
       _ => spark.read.parquet(path).schema)
     spark.read.schema(schema).parquet(path)
   }
-
-  /** A/B kill switch (tools.CacheAbProbe); production default ON. */
-  @volatile private[graft] var schemaCacheEnabled: Boolean = true
 
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()

@@ -54,15 +54,6 @@ object DedupIngest {
     try body finally spark.sparkContext.setJobDescription(null)
   }
 
-  /** Opt-in stage split for [[admitBatchEmbedding]]: when true, the
-    * batch's survivors materialize under their own job (the corpus
-    * band-join probe) BEFORE the in-batch pair join reads them, so
-    * the two candidate tiers' costs separate in the stage table. One
-    * extra cache-fill action — measurement plumbing, default off
-    * (production pays the fused plan).
-    */
-  @volatile private[graft] var instrumentAdmission: Boolean = false
-
   /** True iff `dir` holds at least one COMMITTED data file. Directory
     * existence alone is the wrong bootstrap signal: a crash mid-write
     * leaves the directory created with only `_temporary`/staging
@@ -1359,11 +1350,6 @@ object DedupIngest {
         }
       val survivors = b.join(corpusDups, Seq(idCol), "left_anti").persist()
       try {
-        // measurement-only split (see [[instrumentAdmission]]): fill
-        // the survivors cache under its own job so the corpus
-        // band-join probe's cost separates from the in-batch pairing
-        if (instrumentAdmission)
-          described(spark, "admit:corpus-probe")(survivors.count())
         // (2) in-batch candidate pairs among survivors → exact cosine
         // → driver-side greedy by id (see admitBatchNearDup for why
         // sequential semantics admit no one-shot join)

@@ -647,11 +647,6 @@ object Dedup {
     embeddingNearDupsAnnSeeds(embeddings, threshold, bands, bitsPerBand,
       Seq(seed), dedup, n)
 
-  /** A/B kill switch for the data-sized pair-pass width (tools probes
-    * flip it in one JVM — the interleaved protocol); OFF restores the
-    * pinned session-width repartition. Production default ON. */
-  @volatile private[graft] var dataSizedPairWidth: Boolean = true
-
   /** Shuffle width for a blocked pair pass, sized to the ESTIMATED
     * in-join candidate fan-out instead of pinned at the session width
     * (r15, VERDICT r14 #3; guide §2.2 — the width should track the
@@ -671,8 +666,7 @@ object Dedup {
     * callers already paid once).
     */
   private[graft] def pairWidth(estPairs: Double, nParts: Int): Int =
-    if (!dataSizedPairWidth || !java.lang.Double.isFinite(estPairs) ||
-        estPairs <= 0) nParts
+    if (!java.lang.Double.isFinite(estPairs) || estPairs <= 0) nParts
     else math.max(1L, math.min(nParts.toLong,
       math.ceil(estPairs / 128e3).toLong)).toInt
 

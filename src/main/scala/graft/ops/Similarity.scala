@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions._
+import scala.util.control.NonFatal
 
 /** Similarity search over an `array<float>` embedding column
   * (north-star surface, SURVEY.md §2.11).
@@ -1892,11 +1893,6 @@ object Similarity {
           .otherwise(lit(-1.0)).as("next_cos"))
   }
 
-  /** A/B kill switch for the fused adaptive probe (tools probes flip
-    * it in one JVM — the interleaved protocol). Production default ON;
-    * the size gate below still decides per index. */
-  @volatile private[graft] var fusedAdaptiveEnabled: Boolean = true
-
   /** Should the adaptive/filtered probe run FUSED (one wide pass, two
     * selections) instead of two-pass (narrow, then re-probe the
     * escalated tail)? Pure performance dispatch — both paths return
@@ -1920,17 +1916,18 @@ object Similarity {
     */
   private[graft] def fusedAdaptiveEligible(spark: org.apache.spark.sql.SparkSession,
                                            dir: String): Boolean = {
-    if (!fusedAdaptiveEnabled) return false
-    val maxBytes =
-      try spark.conf.get("spark.graft.sim.fusedAdaptiveMaxBytes",
-        (1L << 30).toString).toLong
-      catch { case _: NumberFormatException => return false }
+    val key = "spark.graft.sim.fusedAdaptiveMaxBytes"
+    val raw = spark.conf.get(key, (1L << 30).toString)
+    // the conf is the fork's only selector: a typo must not silently
+    // pick the two-pass path
+    val maxBytes = raw.toLongOption.getOrElse(throw new IllegalArgumentException(
+      s"$key must be a byte count (≤ 0 forces two-pass), got '$raw'"))
     if (maxBytes <= 0) return false
     try {
       val p = new org.apache.hadoop.fs.Path(dir)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.getContentSummary(p).getLength <= maxBytes
-    } catch { case _: Throwable => false }
+    } catch { case NonFatal(_) => false }
   }
 
   /** ONE-PASS fusion of the adaptive probe's two passes (r15, VERDICT
@@ -2380,15 +2377,8 @@ object Similarity {
 
   def clearModelCache(): Unit = modelCache.clear()
 
-  /** A/B kill switch for the model cache (tools.CacheAbProbe measures
-    * the cache's worth with cache-on/cache-off interleaved in one JVM
-    * — the only noise-immune protocol on a drifting box). Production
-    * default is ON. */
-  @volatile private[graft] var modelCacheEnabled: Boolean = true
-
   private def cachedModel[T <: AnyRef](spark: org.apache.spark.sql.SparkSession,
                                        tree: String)(load: => T): T = {
-    if (!modelCacheEnabled) return load
     val fs = new org.apache.hadoop.fs.Path(tree)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     readEpoch(fs, tree) match {

@@ -14,17 +14,16 @@ import graft.GraftSession
   * function the stream's foreachBatch calls) over batch-sized static
   * frames against a growing corpus, with the admission stages labeled
   * via job descriptions ([[graft.etl.DedupIngest]]'s `described`) and
-  * summed per batch by a SparkListener. `instrumentAdmission` adds
-  * the one extra cache-fill action that splits the corpus band-join
-  * probe from the in-batch pairing — flagged in the output.
+  * summed per batch by a SparkListener. It measures the production
+  * plan, so the corpus band-join probe and the in-batch pairing run
+  * as one action and report together under `admit:probe+pairs`.
   *
   * Stages reported per batch:
   *   admit:sign+nullcheck   batch persist fill (sign + norm) + null guard
-  *   admit:corpus-probe     band equi-join vs the persisted `_sbands`
+  *   admit:probe+pairs      band equi-join vs the persisted `_sbands`
   *                          index + fused cosine verify + anti-join
-  *                          (survivors cache fill)
-  *   admit:probe+pairs      in-batch pair join among survivors (the
-  *                          corpus probe's cost already cached away)
+  *                          (survivors cache fill), then the in-batch
+  *                          pair join among survivors
   *   admit:count            admitted-count action (cached, ~0)
   *   admit:commit-corpus    dynamic partition overwrite, documents
   *   admit:commit-bands     dynamic partition overwrite, band postings
@@ -108,7 +107,6 @@ object ComposedProbe {
     // deployment choice: 6 bands × 10 bits
     graft.etl.IndexIngest.bootstrapDedupedBinary(seed, corpusDir, indexDir,
       bands = 6, bitsPerBand = 10, stateBuckets = stateBuckets)
-    graft.etl.DedupIngest.instrumentAdmission = true
 
     // listener events post on an async bus: without a drain, late
     // onJobEnd events get dropped by the next batch's clear() or
@@ -149,8 +147,7 @@ object ComposedProbe {
     }
     println(s"""{"metric":"composed_stage_probe","batch_rows":$batchRows,""" +
       s""""dup_pct":$dupPct,"cpus":$cpus,"bands":6,"bits_per_band":10,""" +
-      s""""state_buckets":$stateBuckets,""" +
-      s""""instrumented_split":true,"batches":[${batches.mkString(",")}]}""")
+      s""""state_buckets":$stateBuckets,"batches":[${batches.mkString(",")}]}""")
     spark.stop()
   }
 }

@@ -430,12 +430,9 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     assert(Dedup.pairWidth(lshEst(20000, 1, 8, 7), 32) == 32)
     // sf25 (n=500000, nlist capped 4096): saturated at any realistic width
     assert(Dedup.pairWidth(cellsEst(500000, 3, Dedup.semParams(500000)), 512) == 512)
-    // unknown estimate or A/B off: the pinned session width, unchanged
+    // unknown estimate: the pinned session width, unchanged
     assert(Dedup.pairWidth(-1.0, 32) == 32)
     assert(Dedup.pairWidth(Double.NaN, 32) == 32)
-    Dedup.dataSizedPairWidth = false
-    try assert(Dedup.pairWidth(cellsEst(2000, 3, 16), 32) == 32)
-    finally Dedup.dataSizedPairWidth = true
   }
 
   test("semantic dedup: planted tight clusters recovered, subset of exact") {

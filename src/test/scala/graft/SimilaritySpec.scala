@@ -1013,28 +1013,31 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
   test("fused adaptive probe ≡ two-pass, both dispatch arms, every escalation regime") {
     // r15 fusion (VERDICT r14 #1): one wide pass + narrow-prefix
     // selection must return EXACTLY the two-pass composition's rows.
-    // The toggle isolates the dispatch — everything else identical —
-    // across margins that escalate nothing (-3), some (0), all (+2).
+    // The size-gate conf isolates the dispatch — 0 forces two-pass,
+    // everything else identical — across margins that escalate
+    // nothing (-3), some (0), all (+2).
     val dir = s"${System.getProperty("java.io.tmpdir")}/graft-ivfpq-fusedab"
     Similarity.buildIvfPqIndex(corpus, dir, nlist = 8, m = 8, ksub = 16,
       metaCols = Seq("label"))
+    val key = "spark.graft.sim.fusedAdaptiveMaxBytes"
+    def withMaxBytes[T](v: String)(f: => T): T = {
+      spark.conf.set(key, v)
+      try f finally spark.conf.unset(key)
+    }
     // non-vacuous: the tiny fixture must be under the size gate, and
     // the conf knob must be able to force two-pass
     assert(Similarity.fusedAdaptiveEligible(spark, dir))
-    spark.conf.set("spark.graft.sim.fusedAdaptiveMaxBytes", "0")
-    assert(!Similarity.fusedAdaptiveEligible(spark, dir))
-    spark.conf.unset("spark.graft.sim.fusedAdaptiveMaxBytes")
+    assert(!withMaxBytes("0")(Similarity.fusedAdaptiveEligible(spark, dir)))
+    // the conf is the only selector: a malformed value fails loudly
+    // instead of silently picking two-pass
+    val bad = withMaxBytes("1GiB")(intercept[IllegalArgumentException](
+      Similarity.fusedAdaptiveEligible(spark, dir)))
+    assert(bad.getMessage.contains(key) && bad.getMessage.contains("1GiB"))
     val q = corpus.filter(col("vec_id") < 30)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Double, Long)].collect().toSet
-    def both(f: => org.apache.spark.sql.DataFrame) = {
-      Similarity.fusedAdaptiveEnabled = true
-      val fused = try rows(f)
-        finally Similarity.fusedAdaptiveEnabled = false
-      val twoPass = try rows(f)
-        finally Similarity.fusedAdaptiveEnabled = true
-      (fused, twoPass)
-    }
+    def both(f: => org.apache.spark.sql.DataFrame) =
+      (rows(f), withMaxBytes("0")(rows(f)))
     for (m <- Seq(-3.0, 0.0, 2.0)) {
       val (fa, ta) = both(Similarity.ivfPqIndexedTopKAdaptive(spark, dir, q,
         k = 5, nprobe0 = 1, nprobeMax = 8, margin = m, rerank = 300))
