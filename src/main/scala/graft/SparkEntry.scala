@@ -3490,11 +3490,11 @@ object SparkEntry {
         // distributed bloom build over the shingle hashes; the count is
         // one agg over the (small) held-out side and sizes the bitset
         val benchHashes = bench.select(xxhash64(col("g")).as("h"))
-        val blob = graft.functions.Bloom.build(
-          benchHashes, "h", benchHashes.count(), fpp = 0.01)
+        val filter = s.sparkContext.broadcast(graft.functions.Bloom.build(
+          benchHashes, "h", benchHashes.count(), fpp = 0.01))
         val corpus = docs.filter(col("source") =!= "src0")
         val candidates = shingles(corpus)
-          .filter(graft.functions.Bloom.mightContain(blob, xxhash64(col("g"))))
+          .filter(graft.functions.Bloom.mightContain(filter, xxhash64(col("g"))))
         val bad = candidates
           .join(broadcast(bench), Seq("g"), "left_semi")
           .select("doc_id").distinct()

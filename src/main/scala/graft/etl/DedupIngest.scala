@@ -30,14 +30,17 @@ import graft.ops.Dedup
   * reference's blind append (streaming-longtime.py:124-142), which
   * duplicates on every replay.
   *
-  * Scale posture: per batch, the corpus side is ONE count (parquet
-  * metadata) + one Bloom build over corpus keys. At 100 TB the Bloom
-  * build itself should not rescan the corpus per trigger — maintain
-  * the filter incrementally (`BloomFilter.mergeInPlace` of the
-  * admitted rows' filter, kept on the driver or in the checkpoint)
-  * or persist the fingerprint index bucketed (`Routing.writeBucketed`)
-  * so the confirm join is corpus-shuffle-free; both are the same
-  * tiering, built here from the corpus frame for self-containment.
+  * Scale posture: the plain [[admitBatch]] rebuilds the corpus Bloom
+  * from a full corpus scan every trigger — O(corpus), kept for small
+  * corpora and callers' own foreachBatch. The production form is
+  * [[admitBatchIncremental]]: the filter persists as a checkpointed
+  * chain, tasks probe it through ONE broadcast per trigger, each
+  * trigger folds only its admitted fingerprints into a copy on the
+  * driver, and bloom-positive rows confirm against a fingerprint
+  * index (bucketed on the key with `stateBuckets > 0`, so the confirm
+  * join is index-shuffle-free). Per trigger that is O(batch) plus a
+  * filter-sized read, broadcast and write (8 MB at the default
+  * provision; see the geometry note there).
   */
 object DedupIngest {
 
@@ -49,9 +52,14 @@ object DedupIngest {
     * up in the Spark UI and are summed per stage by
     * [[graft.tools.ComposedProbe]]'s listener.
     */
-  private def described[T](spark: SparkSession, desc: String)(body: => T): T = {
-    spark.sparkContext.setJobDescription(desc)
-    try body finally spark.sparkContext.setJobDescription(null)
+  private[graft] def described[T](spark: SparkSession, desc: String)(body: => T): T = {
+    // restore, not clear: the streaming engine labels every job of a
+    // trigger with its batch description, and the jobs after this
+    // action belong to the same trigger
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(desc)
+    try body finally sc.setLocalProperty("spark.job.description", prev)
   }
 
   /** True iff `dir` holds at least one COMMITTED data file. Directory
@@ -120,14 +128,25 @@ object DedupIngest {
                                     storeDir: String, m: StateMeta): Unit = {
     val body = s"bands=${m.bands}\nbits=${m.bits}\nseed=${m.seed}\n" +
       s"buckets=${m.buckets}\n"
-    val p = stateMetaPath(storeDir)
+    writeAtomically(fs, stateMetaPath(storeDir), "writeStateMeta")(
+      _.write(body.getBytes("UTF-8")))
+  }
+
+  /** Temp file + rename. Every file written this way is
+    * correctness-bearing, and Hadoop filesystems report rename/delete
+    * failure by returning false, not throwing — so a false return
+    * fails LOUDLY instead of leaving a stale or missing file behind.
+    */
+  private def writeAtomically(fs: org.apache.hadoop.fs.FileSystem,
+                              p: org.apache.hadoop.fs.Path, what: String)(
+      write: java.io.OutputStream => Unit): Unit = {
     val tmp = new org.apache.hadoop.fs.Path(p.getParent, s".${p.getName}.tmp")
     val out = fs.create(tmp, true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
+    try write(out) finally out.close()
     if (fs.exists(p) && !fs.delete(p, false))
-      throw new java.io.IOException(s"writeStateMeta: could not delete stale $p")
+      throw new java.io.IOException(s"$what: could not delete stale $p")
     if (!fs.rename(tmp, p))
-      throw new java.io.IOException(s"writeStateMeta: rename $tmp -> $p failed")
+      throw new java.io.IOException(s"$what: rename $tmp -> $p failed")
   }
 
   /** Verify the caller's sketch params against the store's recorded
@@ -266,13 +285,16 @@ object DedupIngest {
     *
     *  - the merged corpus Bloom persists in the CHECKPOINT dir, one
     *    blob per batch (`graft-bloom/bloom-<tag>-<id>`); batch N
-    *    probes the newest blob with id < N and writes
-    *    `bloom-<tag>-<N>` = prior ∪ Bloom(admitted) — an
-    *    O(batch)-build + O(filter)-merge (`BloomFilter.mergeInPlace`;
-    *    all blobs share (expectedItems, fpp) so bitsets stay
-    *    merge-compatible). A full rebuild happens ONLY on
-    *    bootstrap/repair (fresh checkpoint, or a deleted bloom dir) —
-    *    and even then from the fingerprint index, not the documents;
+    *    probes the newest blob with id < N — its tasks read it through
+    *    one broadcast, never as bytes inside the task binary — and
+    *    writes `bloom-<tag>-<N>` = prior ∪ admitted: the admitted
+    *    rows' fingerprints (8 bytes each) are collected and `putLong`
+    *    into a COPY of the prior on the driver, O(batch) hashing at
+    *    the prior's geometry. That is bit-identical to building the
+    *    admitted rows' filter and OR-merging it into the prior (same
+    *    geometry, same `putLong` hashing). A full rebuild happens ONLY
+    *    on bootstrap/repair (fresh checkpoint, or a deleted bloom dir)
+    *    — and even then from the fingerprint index, not the documents;
     *  - bloom-POSITIVE rows (true dups + ~fpp false positives)
     *    confirm exactly against a persisted FINGERPRINT INDEX
     *    (`<corpusDir>_fps`: (_fp, key), partitioned by ingest batch)
@@ -292,14 +314,21 @@ object DedupIngest {
     *    `bloom-<N>` is never read (replay reads < N) and is
     *    overwritten whole.
     *
-    * `expectedItems` PROVISIONS the filter for the target corpus size
-    * (one size must serve the whole chain — Bloom bitsets only merge
-    * at equal geometry). Oversubscribing degrades the FP rate toward
-    * 1, which degrades PERFORMANCE (more rows confirm against the
-    * index), never correctness (no false negatives; the exact join
-    * removes false positives). Repair = delete the bloom dir and
-    * restart with a larger value: the next batch rebuilds from the
-    * fingerprint index at the new geometry.
+    * `expectedItems` PROVISIONS the filter for the target corpus size.
+    * The chain's geometry is fixed by the build that starts it (the
+    * empty-corpus first batch, or the rebuild from the index); later
+    * batches fold into that geometry whatever `expectedItems` they
+    * pass. The build is `stat.bloomFilter`, which Spark clamps to
+    * `spark.sql.optimizer.runtime.bloomFilter.maxNumItems` (4M) and
+    * `maxNumBits` (64 Mbit): at the default 10M provision the filter
+    * is 8 MB with 11 hash functions, and its FP rate at full
+    * provision is ~11 %, not `fpp`. Provisions above 4M items
+    * therefore all give that same filter. Oversubscribing degrades
+    * the FP rate toward 1, which degrades PERFORMANCE (more rows
+    * confirm against the index), never correctness (no false
+    * negatives; the exact join removes false positives). A new
+    * geometry takes a deleted bloom dir: the next batch rebuilds from
+    * the fingerprint index at the current `expectedItems`.
     *
     * Single active writer per corpus (the same contract as
     * [[admitBatchNearDup]]): a second concurrent run's bloom chain
@@ -369,16 +398,17 @@ object DedupIngest {
       dropBloomChain(fs, checkpointDir, runTag)
     }
 
-    // prior filter: newest committed blob below this batch, else a
-    // repair rebuild from the fingerprint index (NOT the documents),
-    // else empty-corpus bootstrap (None)
-    val prior: Option[org.apache.spark.util.sketch.BloomFilter] =
+    // prior filter, as its serialized bytes: newest committed blob
+    // below this batch, else a repair rebuild from the fingerprint
+    // index (NOT the documents), else empty-corpus bootstrap (None)
+    val prior: Option[Array[Byte]] =
       loadBloomBelow(fs, checkpointDir, runTag, batchId).orElse {
         if (hasCommittedData(fs, fpsDir))
-          Some(spark.read.parquet(fpsDir).stat
-            .bloomFilter("_fp", math.max(expectedItems, 1L), fpp))
+          Some(serializeBloom(spark.read.parquet(fpsDir).stat
+            .bloomFilter("_fp", math.max(expectedItems, 1L), fpp)))
         else None
       }
+    val probeFilter = prior.map(readBloom)
 
     // stabilize the BATCH before planning: the admission plan reads
     // it on both bloom branches and keep-first scans it again, so
@@ -389,32 +419,42 @@ object DedupIngest {
     // before this boundary; the corpus row count was the truth). One
     // cache fill reads the source exactly once.
     val stable = batch.persist()
+    val probe = probeFilter.map(spark.sparkContext.broadcast(_))
     val admitted = incrementalAdmissionPlan(spark, stable, fpsDir,
-      prior.map(serializeBloom), partVal, key, tiebreaker, fpsTable).persist()
+      probe, partVal, key, tiebreaker, fpsTable).persist()
     try {
-      val n = admitted.count()
-      // (1) bloom-<N> = prior ∪ Bloom(admitted) — same geometry ⇒
-      // mergeable; distributed build over the admitted rows only.
-      // Written even when n == 0 PROVIDED a prior filter exists (the
-      // blob is then prior verbatim): a batch id without a blob forces
-      // every later batch down the rebuild-from-index repair path
-      // until one admits — correct but O(corpus index) per trigger
-      // instead of O(batch). When there is NO prior AND nothing
-      // admitted, nothing is known and NO blob is written — an empty
-      // filter would claim knowledge it doesn't have. Blobs that
-      // predate a [[bootstrapCorpus]] backfill (and so lack its keys)
-      // are handled by the bootstrap-epoch guard above regardless of
-      // how they were written. (The distributed build is skipped on an
-      // empty batch either way: Spark's bloom aggregate has no
-      // zero-row result.)
+      val n = described(spark, "admit:count")(admitted.count())
+      // (1) bloom-<N> = prior ∪ admitted, at the prior's geometry.
+      // With a prior, the admitted fingerprints fold into a fresh
+      // COPY of it on the driver: the probe's filter must not change
+      // while `admitted` can still be recomputed (a cache eviction
+      // re-runs the probe). Written even when n == 0 (the blob is
+      // then prior verbatim): a batch id without a blob forces every
+      // later batch down the rebuild-from-index repair path until one
+      // admits — correct but O(corpus index) per trigger instead of
+      // O(batch). When there is NO prior AND nothing admitted,
+      // nothing is known and NO blob is written — an empty filter
+      // would claim knowledge it doesn't have. Without a prior the
+      // admitted rows' filter is built distributed at the provisioned
+      // geometry, which then holds for the whole chain (Spark's bloom
+      // aggregate has no zero-row result, hence the n > 0 guard).
+      // Blobs that predate a [[bootstrapCorpus]] backfill (and so lack
+      // its keys) are handled by the bootstrap-epoch guard above
+      // regardless of how they were written.
+      val admittedFps = admitted.select(xxhash64(col(key)).as("_fp"))
       val batchFilter: Option[org.apache.spark.util.sketch.BloomFilter] =
-        if (n > 0) {
-          val f = admitted
-            .select(xxhash64(col(key)).as("_fp")).stat
-            .bloomFilter("_fp", math.max(expectedItems, 1L), fpp)
-          prior.foreach(f.mergeInPlace)
-          Some(f)
-        } else prior
+        prior match {
+          case Some(bytes) if n > 0 =>
+            val f = readBloom(bytes)
+            described(spark, "admit:bloom-fold")(
+              admittedFps.as(org.apache.spark.sql.Encoders.scalaLong).collect())
+              .foreach(f.putLong)
+            Some(f)
+          case Some(_) => probeFilter
+          case None if n > 0 => Some(described(spark, "admit:bloom-fold")(
+            admittedFps.stat.bloomFilter("_fp", math.max(expectedItems, 1L), fpp)))
+          case None => None
+        }
       batchFilter.foreach { f =>
         writeBloom(fs, bloomPath(checkpointDir, runTag, batchId), f)
         pruneBlooms(fs, checkpointDir, runTag, batchId)
@@ -428,17 +468,20 @@ object DedupIngest {
       }
       if (n > 0) {
         // (2) fingerprint-index partition (idempotent overwrite)
-        writeFps(admitted.select(xxhash64(col(key)).as("_fp"), col(key))
-          .withColumn("_ingest_batch", lit(partVal)))
+        described(spark, "admit:commit-fps")(
+          writeFps(admitted.select(xxhash64(col(key)).as("_fp"), col(key))
+            .withColumn("_ingest_batch", lit(partVal))))
         // (3) document partition (idempotent overwrite)
-        admitted.withColumn("_ingest_batch", lit(partVal))
-          .write.mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("_ingest_batch").parquet(corpusDir)
+        described(spark, "admit:commit-corpus")(
+          admitted.withColumn("_ingest_batch", lit(partVal))
+            .write.mode(SaveMode.Overwrite)
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("_ingest_batch").parquet(corpusDir))
       }
       n
     } finally {
       admitted.unpersist()
+      probe.foreach(_.destroy())
       stable.unpersist()
     }
   }
@@ -452,16 +495,17 @@ object DedupIngest {
     * verdict.
     */
   private[graft] def incrementalAdmissionPlan(spark: SparkSession,
-      batch: DataFrame, fpsDir: String, bloomBlob: Option[Array[Byte]],
+      batch: DataFrame, fpsDir: String,
+      bloom: Option[org.apache.spark.broadcast.Broadcast[org.apache.spark.util.sketch.BloomFilter]],
       excludePartVal: String, key: String, tiebreaker: String,
       fpsTable: Option[String] = None): DataFrame = {
     import org.apache.spark.sql.functions._
     val firsts = graft.ops.Dedup.exactKeepFirst(batch, Seq(key), tiebreaker)
       .withColumn("_fp", xxhash64(col(key)))
-    bloomBlob match {
+    bloom match {
       case None => firsts.drop("_fp") // empty corpus: every first is new
-      case Some(blob) =>
-        val inBloom = graft.functions.Bloom.mightContain(blob, col("_fp"))
+      case Some(filter) =>
+        val inBloom = graft.functions.Bloom.mightContain(filter, col("_fp"))
         val idx = fpsTable.fold(spark.read.parquet(fpsDir))(spark.table)
           // string compare: numeric legacy partition values may infer
           // as LONG (see admitBatchNearDup)
@@ -585,22 +629,11 @@ object DedupIngest {
     }
 
   /** The epoch marker is CORRECTNESS-BEARING (a missing/stale marker
-    * lets a pre-backfill chain be trusted), and Hadoop filesystems
-    * report rename/delete failure by returning false, not throwing —
-    * so this write fails LOUDLY on a false return instead of leaving
-    * the silently-unsafe state behind (code-review r8; contrast
-    * [[writeBloom]], where a missing blob only degrades to a
-    * rebuild). */
+    * lets a pre-backfill chain be trusted), so it fails loudly through
+    * [[writeAtomically]] (code-review r8), as [[writeBloom]] does. */
   private def writeEpoch(fs: org.apache.hadoop.fs.FileSystem,
-                         p: org.apache.hadoop.fs.Path, epoch: String): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(p.getParent, s".${p.getName}.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(epoch.getBytes("UTF-8")) finally out.close()
-    if (fs.exists(p) && !fs.delete(p, false))
-      throw new java.io.IOException(s"writeEpoch: could not delete stale $p")
-    if (!fs.rename(tmp, p))
-      throw new java.io.IOException(s"writeEpoch: rename $tmp -> $p failed")
-  }
+                         p: org.apache.hadoop.fs.Path, epoch: String): Unit =
+    writeAtomically(fs, p, "writeEpoch")(_.write(epoch.getBytes("UTF-8")))
 
   /** Delete every blob (and the epoch stamp) under this tag — used
     * when the chain's epoch predates the newest bootstrap backfill.
@@ -681,13 +714,12 @@ object DedupIngest {
 
   private def loadBloomBelow(fs: org.apache.hadoop.fs.FileSystem,
                              checkpointDir: String, tag: String, batchId: Long)
-      : Option[org.apache.spark.util.sketch.BloomFilter] = {
+      : Option[Array[Byte]] = {
     val allIds = chainIds(fs, checkpointDir, tag)
     requireNoPriorRunIds(allIds, checkpointDir, tag, batchId)
     allIds.filter(_ < batchId).maxOption.map { id =>
       val in = fs.open(bloomPath(checkpointDir, tag, id))
-      try org.apache.spark.util.sketch.BloomFilter.readFrom(in)
-      finally in.close()
+      try in.readAllBytes() finally in.close()
     }
   }
 
@@ -697,23 +729,24 @@ object DedupIngest {
     out.toByteArray
   }
 
-  /** Atomic-enough blob write: temp file + rename (a half-written blob
-    * is only ever the CURRENT batch's, which replay never reads — the
-    * rename just keeps the listing clean).
+  private def readBloom(bytes: Array[Byte]): org.apache.spark.util.sketch.BloomFilter =
+    org.apache.spark.util.sketch.BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes))
+
+  /** Blob write through [[writeAtomically]]: a half-written blob is
+    * only ever the CURRENT batch's, which replay never reads, but a
+    * MISSING blob is not harmless — [[pruneBlooms]] keeps blob N−1, so
+    * batch N+1 would probe a filter without batch N's admissions and
+    * admit their duplicates bloom-negative, with no exact check. So a
+    * failed rename fails the trigger before any fps or docs commit.
     */
   private def writeBloom(fs: org.apache.hadoop.fs.FileSystem,
                          path: org.apache.hadoop.fs.Path,
-                         f: org.apache.spark.util.sketch.BloomFilter): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(path.getParent, s".${path.getName}.tmp")
-    val out = fs.create(tmp, true)
-    try f.writeTo(out) finally out.close()
-    fs.delete(path, false)
-    fs.rename(tmp, path)
-  }
+                         f: org.apache.spark.util.sketch.BloomFilter): Unit =
+    writeAtomically(fs, path, "writeBloom")(f.writeTo)
 
   /** Best-effort prune: a replay only ever needs id = N−1, so keep the
     * two newest blobs and drop the rest (each blob is filter-sized —
-    * ~1.2 MB per million provisioned keys).
+    * 8 MB at the default provision, see [[admitBatchIncremental]]).
     */
   private def pruneBlooms(fs: org.apache.hadoop.fs.FileSystem,
                           checkpointDir: String, tag: String,

@@ -310,17 +310,15 @@ object IndexIngest {
       batchId, idCol, embCol, threshold, bands, bitsPerBand, hashSeed,
       runTag = tag, stateBuckets = stateBuckets)
     if (n > 0) {
-      // stage labels match the admission stage's (DedupIngest's
-      // `described`) so one listener sums the whole trigger
-      spark.sparkContext.setJobDescription("index:compact")
-      try maybeCompact(spark, indexDir, s"$tag-$batchId", autoCompactSegments,
-        Similarity.compactBinaryIndex(_, _, _))
-      finally spark.sparkContext.setJobDescription(null)
-      spark.sparkContext.setJobDescription("index:append")
-      try Similarity.appendToBinaryIndex(spark, indexDir,
-        admittedOf(spark, corpusDir, s"$tag-$batchId", idCol, embCol),
-        seg = Some(s"$tag-$batchId"))
-      finally spark.sparkContext.setJobDescription(null)
+      // stage labels match the admission stage's so one listener sums
+      // the whole trigger
+      DedupIngest.described(spark, "index:compact")(
+        maybeCompact(spark, indexDir, s"$tag-$batchId", autoCompactSegments,
+          Similarity.compactBinaryIndex(_, _, _)))
+      DedupIngest.described(spark, "index:append")(
+        Similarity.appendToBinaryIndex(spark, indexDir,
+          admittedOf(spark, corpusDir, s"$tag-$batchId", idCol, embCol),
+          seg = Some(s"$tag-$batchId")))
     }
   }
 

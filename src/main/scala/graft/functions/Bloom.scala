@@ -1,7 +1,6 @@
 package graft.functions
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
-
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -15,12 +14,20 @@ import org.apache.spark.util.sketch.BloomFilter
   * SET (`ext_decontaminate`). That stops working when the benchmark
   * side outgrows the broadcast threshold — but its BLOOM FILTER still
   * broadcasts long after the exact set cannot: ~1.2 bytes/key at 1%
-  * FP (vs ≥ 50 bytes/key for a hashed string set), so a 1B-shingle
-  * held-out set is a ~1.2 GB bitset instead of an un-broadcastable
-  * 50 GB hash set. The bloom prunes ~99% of corpus-side rows BEFORE
-  * they reach the exact verify join, shrinking its shuffle to the
-  * candidate survivors; false positives are removed by that exact
-  * join, so results are bit-identical to the unfiltered plan.
+  * FP (vs ≥ 50 bytes/key for a hashed string set). The bloom prunes
+  * ~99% of corpus-side rows BEFORE they reach the exact verify join,
+  * shrinking its shuffle to the candidate survivors; false positives
+  * are removed by that exact join, so results are bit-identical to the
+  * unfiltered plan.
+  *
+  * Geometry: [[build]] goes through `stat.bloomFilter`
+  * (`bloom_filter_agg`), which clamps the filter to
+  * `spark.sql.optimizer.runtime.bloomFilter.maxNumItems` (4M) and
+  * `maxNumBits` (64 Mbit) — an 8 MB bitset with 11 hash functions at
+  * most, whatever `expectedItems` asks for. Up to 4M items the 1% FP
+  * target holds; past it the FP rate grows (~11 % at 10M items). Only
+  * the prune gets weaker: the exact join still removes every false
+  * positive.
   *
   * Spark uses the same shape internally for runtime row-group
   * filtering (InjectRuntimeFilter); this exposes it as a first-class
@@ -29,30 +36,28 @@ import org.apache.spark.util.sketch.BloomFilter
   */
 object Bloom {
 
-  /** Distributed build over a LongType column (treeAggregate under
-    * `stat.bloomFilter`), serialized to a broadcastable blob.
+  /** Distributed build over a LongType column (`stat.bloomFilter`;
+    * geometry clamped as the object doc says).
     */
   def build(df: org.apache.spark.sql.DataFrame, col: String,
-            expectedItems: Long, fpp: Double = 0.01): Array[Byte] = {
-    val filter = df.stat.bloomFilter(col, math.max(expectedItems, 1L), fpp)
-    val out = new ByteArrayOutputStream()
-    filter.writeTo(out)
-    out.toByteArray
-  }
+            expectedItems: Long, fpp: Double = 0.01): BloomFilter =
+    df.stat.bloomFilter(col, math.max(expectedItems, 1L), fpp)
 
-  /** `mightContain(blob, hash)` as a codegen'd Column predicate. */
-  def mightContain(blob: Array[Byte], hash: Column): Column =
+  /** `mightContain(filter, hash)` as a codegen'd Column predicate. */
+  def mightContain(filter: Broadcast[BloomFilter], hash: Column): Column =
     GraftColumnBridge.column(
-      BloomMightContainExpr(blob, GraftColumnBridge.expression(hash)))
+      BloomMightContainExpr(filter, GraftColumnBridge.expression(hash)))
 }
 
-/** Membership probe against a serialized [[BloomFilter]]. The blob
-  * rides the serialized expression to executors (one copy per task
-  * set, not per row); the filter deserializes once per executor via
-  * the transient lazy and the generated code calls straight into
-  * `mightContainLong` — the probe stays inside whole-stage codegen.
+/** Membership probe against a broadcast [[BloomFilter]]. The
+  * serialized expression carries only the broadcast handle, so task
+  * binaries stay small however large the filter is; each task fetches
+  * the filter once through the block manager (in local mode: the
+  * driver's own object, no copy) via the transient lazy, and the
+  * generated code calls straight into `mightContainLong` — the probe
+  * stays inside whole-stage codegen.
   */
-final case class BloomMightContainExpr(blob: Array[Byte], child: Expression)
+final case class BloomMightContainExpr(filter: Broadcast[BloomFilter], child: Expression)
     extends UnaryExpression {
 
   override def dataType: DataType = BooleanType
@@ -64,13 +69,12 @@ final case class BloomMightContainExpr(blob: Array[Byte], child: Expression)
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
         s"bloom probe needs a LongType hash, got ${child.dataType}")
 
-  @transient private lazy val filter: BloomFilter =
-    BloomFilter.readFrom(new ByteArrayInputStream(blob))
+  @transient private lazy val bloom: BloomFilter = filter.value
 
   /** Exposed for codegen: the generated code probes via this method so
-    * the lazy deserialization is shared with interpreted eval.
+    * the lazy fetch is shared with interpreted eval.
     */
-  def probe(hash: Long): Boolean = filter.mightContainLong(hash)
+  def probe(hash: Long): Boolean = bloom.mightContainLong(hash)
 
   override protected def nullSafeEval(input: Any): Any =
     probe(input.asInstanceOf[Long])

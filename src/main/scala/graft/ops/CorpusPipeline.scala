@@ -50,7 +50,7 @@ import org.apache.spark.sql.functions._
   * scans; the held-out side adds three bounded-by-the-bench-source
   * scans (a narrow token-sum aggregate sizing the Bloom, the Bloom
   * build, and the broadcast verify set). No multi-consumed
-  * intermediates, no persist/cache; nothing but the Bloom blob and
+  * intermediates, no persist/cache; nothing but the Bloom filter and
   * two scalar counts reaches the driver.
   */
 object CorpusPipeline {
@@ -85,8 +85,9 @@ object CorpusPipeline {
     * narrow token-sum scan — token count upper-bounds shingle count,
     * and oversizing a Bloom only lowers its FP rate).
     */
-  private[graft] final case class Decontaminator(bench: DataFrame,
-                                                 blob: Array[Byte]) {
+  private[graft] final case class Decontaminator(
+      bench: DataFrame,
+      filter: org.apache.spark.broadcast.Broadcast[org.apache.spark.util.sketch.BloomFilter]) {
     /** Drop every row of `df` (doc_id, …, text) sharing a shingle
       * with the held-out set; `df` is consumed ONCE (explode_outer +
       * per-doc flag aggregation — see the object doc), carrying
@@ -97,7 +98,7 @@ object CorpusPipeline {
       df.withColumn("_ts", split(col("text"), " "))
         .select((keyCols.map(col) :+ explode_outer(shingleArr).as("g")): _*)
         .withColumn("g", when(
-          graft.functions.Bloom.mightContain(blob, xxhash64(col("g"))), col("g")))
+          graft.functions.Bloom.mightContain(filter, xxhash64(col("g"))), col("g")))
         .join(broadcast(bench.withColumn("_hit", lit(1))), Seq("g"), "left")
         .groupBy(keyCols.map(col): _*)
         .agg(max(coalesce(col("_hit"), lit(0))).as("_contaminated"))
@@ -109,7 +110,7 @@ object CorpusPipeline {
   private[graft] object Decontaminator {
     /** `persistBench = true` caches the shingle set for instances
       * reused across many clean() calls (a resident stream — without
-      * it, only the Bloom blob is materialized once and the shingle
+      * it, only the Bloom filter is materialized once and the shingle
       * set would re-scan, re-explode, re-distinct and re-broadcast
       * per micro-batch; held for the stream's lifetime deliberately,
       * it IS the fixed held-out set, broadcast-sized by contract).
@@ -126,8 +127,8 @@ object CorpusPipeline {
       val expectedShingles = benchDocs
         .agg(coalesce(sum(size(split(col("text"), " "))), lit(0L)))
         .head().getLong(0)
-      Decontaminator(bench,
-        graft.functions.Bloom.build(benchHashes, "h", expectedShingles, fpp = 0.01))
+      Decontaminator(bench, benchDocs.sparkSession.sparkContext.broadcast(
+        graft.functions.Bloom.build(benchHashes, "h", expectedShingles, fpp = 0.01)))
     }
   }
 

@@ -68,11 +68,11 @@ object Dedup {
     val fp = xxhash64(col(key))
     // non-distinct build: the bloom dedups bit-wise, and corpus row
     // count (cheap: parquet count-star) upper-bounds the sizing
-    val blob = graft.functions.Bloom.build(
-      corpus.select(fp.as("_fp")), "_fp", corpus.count(), fpp)
+    val filter = corpus.sparkSession.sparkContext.broadcast(
+      graft.functions.Bloom.build(corpus.select(fp.as("_fp")), "_fp", corpus.count(), fpp))
     val firsts = exactKeepFirst(batch, Seq(key), tiebreaker)
       .withColumn("_fp", fp)
-    val inBloom = graft.functions.Bloom.mightContain(blob, col("_fp"))
+    val inBloom = graft.functions.Bloom.mightContain(filter, col("_fp"))
     val definitelyNew = firsts.filter(!inBloom)
     val confirmedNew = firsts.filter(inBloom)
       .join(corpus.select(fp.as("_fp"), col(key)).distinct(),

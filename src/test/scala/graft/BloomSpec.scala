@@ -1,20 +1,24 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.BoundReference
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
+import org.apache.spark.util.sketch.BloomFilter
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.Bloom
+import graft.functions.{Bloom, BloomMightContainExpr}
 
 class BloomSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
 
   test("bloom has no false negatives and a sane false-positive rate") {
     val members = (0L until 5000L).map(i => i * 2654435761L)
-    val blob = Bloom.build(members.toDF("h"), "h", members.size, fpp = 0.01)
+    val filter = spark.sparkContext.broadcast(
+      Bloom.build(members.toDF("h"), "h", members.size, fpp = 0.01))
 
     val probed = (0L until 20000L).map(i => i * 2654435761L)
       .toDF("h")
-      .withColumn("hit", Bloom.mightContain(blob, col("h")))
+      .withColumn("hit", Bloom.mightContain(filter, col("h")))
       .as[(Long, Boolean)].collect().toMap
     members.foreach(m => assert(probed(m), s"false negative on $m"))
     val fps = probed.count { case (h, hit) => hit && !members.contains(h) }
@@ -23,14 +27,29 @@ class BloomSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("bloom probe survives whole-stage codegen and interpreted eval") {
-    val blob = Bloom.build(Seq(7L, 11L).toDF("h"), "h", 2)
+    val filter = spark.sparkContext.broadcast(Bloom.build(Seq(7L, 11L).toDF("h"), "h", 2))
     val df = Seq(7L, 8L, 11L).toDF("h")
-      .withColumn("hit", Bloom.mightContain(blob, col("h")))
+      .withColumn("hit", Bloom.mightContain(filter, col("h")))
     // codegen path
     assert(df.filter(col("hit")).count() >= 2)
     // interpreted path (collect evaluates the projection too)
     val hits = df.as[(Long, Boolean)].collect().filter(_._2).map(_._1).toSet
     assert(hits.contains(7L) && hits.contains(11L))
+  }
+
+  test("a serialized probe stays small whatever the filter's size") {
+    val big = BloomFilter.create(10000000L, 0.01)
+    big.putLong(42L)
+    val filter = spark.sparkContext.broadcast(big)
+    try {
+      val ser = new org.apache.spark.serializer.JavaSerializer(spark.sparkContext.getConf)
+        .newInstance()
+      val buf = ser.serialize(BloomMightContainExpr(filter, BoundReference(0, LongType, false)))
+      assert(buf.limit() < 64 * 1024,
+        s"probe serializes to ${buf.limit()} bytes for a ${big.bitSize() / 8}-byte filter")
+      // the round-tripped probe still reaches the filter
+      assert(ser.deserialize[BloomMightContainExpr](buf).probe(42L))
+    } finally filter.destroy()
   }
 
   test("bloom-prefiltered decontamination matches the exact plan") {

@@ -223,12 +223,8 @@ class BucketedStateSpec extends AnyFunSuite with SparkTestBase {
     // bucketed shape has exactly one fewer Exchange)
     withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
       val batch = Seq((9L, "a"), (10L, "zz")).toDF("ts", "text")
-      def blob(dir: String) = {
-        val f = spark.read.parquet(dir + "_fps").stat
-          .bloomFilter("_fp", 10000L, 0.01)
-        val out = new java.io.ByteArrayOutputStream()
-        f.writeTo(out); Some(out.toByteArray)
-      }
+      def blob(dir: String) = Some(spark.sparkContext.broadcast(
+        spark.read.parquet(dir + "_fps").stat.bloomFilter("_fp", 10000L, 0.01)))
       val bDir = s"$root/bucketed"
       val bucketedPlan = DedupIngest.incrementalAdmissionPlan(spark, batch,
         bDir + "_fps", blob(bDir), "t-9", "text", "ts",

@@ -131,13 +131,11 @@ class DedupIngestSpec extends AnyFunSuite with SparkTestBase {
     drainInc(stream, dir, cp)
     // the admission DECISION for a follow-up batch, planned exactly as
     // admitBatchIncremental plans it (prior bloom + index-minus-own)
-    val blob = {
-      val f = spark.read.parquet(dir + "_fps").stat.bloomFilter("_fp", 100000L, 0.01)
-      val out = new java.io.ByteArrayOutputStream(); f.writeTo(out); out.toByteArray
-    }
+    val filter = spark.sparkContext.broadcast(
+      spark.read.parquet(dir + "_fps").stat.bloomFilter("_fp", 100000L, 0.01))
     val plan = DedupIngest.incrementalAdmissionPlan(spark,
       Seq((3L, "a"), (4L, "d")).toDF("doc_id", "text"),
-      dir + "_fps", Some(blob), "tag-1", "text", "doc_id")
+      dir + "_fps", Some(filter), "tag-1", "text", "doc_id")
     // decision is right...
     assert(plan.select("doc_id").as[Long].collect().toSet == Set(4L))
     // ...and its physical plan scans the fingerprint sidecar, NOT the
