@@ -3,6 +3,7 @@ package graft.etl
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.io.Commit
 import graft.ops.Dedup
 
 /** Streaming corpus ingest with cross-batch deduplication — the
@@ -128,25 +129,8 @@ object DedupIngest {
                                     storeDir: String, m: StateMeta): Unit = {
     val body = s"bands=${m.bands}\nbits=${m.bits}\nseed=${m.seed}\n" +
       s"buckets=${m.buckets}\n"
-    writeAtomically(fs, stateMetaPath(storeDir), "writeStateMeta")(
+    Commit.writeFile(fs, stateMetaPath(storeDir), "writeStateMeta")(
       _.write(body.getBytes("UTF-8")))
-  }
-
-  /** Temp file + rename. Every file written this way is
-    * correctness-bearing, and Hadoop filesystems report rename/delete
-    * failure by returning false, not throwing — so a false return
-    * fails LOUDLY instead of leaving a stale or missing file behind.
-    */
-  private def writeAtomically(fs: org.apache.hadoop.fs.FileSystem,
-                              p: org.apache.hadoop.fs.Path, what: String)(
-      write: java.io.OutputStream => Unit): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(p.getParent, s".${p.getName}.tmp")
-    val out = fs.create(tmp, true)
-    try write(out) finally out.close()
-    if (fs.exists(p) && !fs.delete(p, false))
-      throw new java.io.IOException(s"$what: could not delete stale $p")
-    if (!fs.rename(tmp, p))
-      throw new java.io.IOException(s"$what: rename $tmp -> $p failed")
   }
 
   /** Verify the caller's sketch params against the store's recorded
@@ -630,10 +614,10 @@ object DedupIngest {
 
   /** The epoch marker is CORRECTNESS-BEARING (a missing/stale marker
     * lets a pre-backfill chain be trusted), so it fails loudly through
-    * [[writeAtomically]] (code-review r8), as [[writeBloom]] does. */
+    * [[Commit.writeFile]] (code-review r8), as [[writeBloom]] does. */
   private def writeEpoch(fs: org.apache.hadoop.fs.FileSystem,
                          p: org.apache.hadoop.fs.Path, epoch: String): Unit =
-    writeAtomically(fs, p, "writeEpoch")(_.write(epoch.getBytes("UTF-8")))
+    Commit.writeFile(fs, p, "writeEpoch")(_.write(epoch.getBytes("UTF-8")))
 
   /** Delete every blob (and the epoch stamp) under this tag — used
     * when the chain's epoch predates the newest bootstrap backfill.
@@ -732,17 +716,17 @@ object DedupIngest {
   private def readBloom(bytes: Array[Byte]): org.apache.spark.util.sketch.BloomFilter =
     org.apache.spark.util.sketch.BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes))
 
-  /** Blob write through [[writeAtomically]]: a half-written blob is
-    * only ever the CURRENT batch's, which replay never reads, but a
-    * MISSING blob is not harmless — [[pruneBlooms]] keeps blob N−1, so
-    * batch N+1 would probe a filter without batch N's admissions and
-    * admit their duplicates bloom-negative, with no exact check. So a
-    * failed rename fails the trigger before any fps or docs commit.
+  /** Blob write through [[Commit.writeFile]], so a blob is never
+    * visible half-written. A MISSING blob is not harmless —
+    * [[pruneBlooms]] keeps blob N−1, so batch N+1 would probe a filter
+    * without batch N's admissions and admit their duplicates
+    * bloom-negative, with no exact check. So a failed rename fails the
+    * trigger before any fps or docs commit.
     */
   private def writeBloom(fs: org.apache.hadoop.fs.FileSystem,
                          path: org.apache.hadoop.fs.Path,
                          f: org.apache.spark.util.sketch.BloomFilter): Unit =
-    writeAtomically(fs, path, "writeBloom")(f.writeTo)
+    Commit.writeFile(fs, path, "writeBloom")(f.writeTo)
 
   /** Best-effort prune: a replay only ever needs id = N−1, so keep the
     * two newest blobs and drop the rest (each blob is filter-sized —

@@ -58,9 +58,10 @@ object IndexIngest {
     * belongs to a committed batch (foreachBatch for batch N only
     * runs after N−1 committed) or to a dead run tag, and folding
     * those into `base` commutes with any replay. Compaction itself
-    * is the fail-safe tmp+rename rewrite, so a crash mid-compact
-    * leaves the original or a recoverable `.old` tree, never a
-    * partial fold.
+    * stages the fold at the hidden `.<index>.tmp` and swaps it in
+    * through [[graft.io.Commit]], so a crash mid-compact leaves the
+    * original live or parked at `.<index>.old`, never a partial fold,
+    * and the next batch's compaction or append heals the park.
     */
   def appendBatch(batch: DataFrame, indexDir: String, checkpointDir: String,
                   batchId: Long, autoCompactSegments: Int = 0): Unit = {

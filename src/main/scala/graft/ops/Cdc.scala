@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
+import graft.io.Commit
+
 /** Change-data-capture materialization. The reference ships a full
   * Debezium connector config for exactly this feed
   * (/root/reference/config/debezium/conf.json — wired in
@@ -46,7 +48,7 @@ object Cdc {
     * keys — at 100 TB a trickle of changes touches a handful of
     * buckets, not the whole table (the full-rewrite variant is the
     * classic foreachBatch-merge scale bug). Each bucket commits by
-    * write-to-fresh-dir + swap.
+    * write-to-fresh-dir + [[graft.io.Commit.swap]].
     *
     * Latest-wins by `seq` makes the merge idempotent, so micro-batch
     * replay after a crash (engine checkpoint = source offsets) cannot
@@ -86,24 +88,10 @@ object Cdc {
       val fs = org.apache.hadoop.fs.FileSystem.get(
         new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
       val root = new org.apache.hadoop.fs.Path(path)
-      // stale parking lot lives OUTSIDE the snapshot root so partition
-      // discovery never sees it
-      val staleRoot = new org.apache.hadoop.fs.Path(
-        path.stripSuffix("/") + "._stale")
-
-      // crash repair: a bucket parked here with no live twin means a
-      // previous run died between the two swap renames — restore it
-      // BEFORE reading `existing`, or those keys would silently vanish
-      // from the re-merged snapshot
-      if (fs.exists(staleRoot)) {
-        fs.listStatus(staleRoot).foreach { st =>
-          val dst = new org.apache.hadoop.fs.Path(root, st.getPath.getName)
-          if (!fs.exists(dst) && !fs.rename(st.getPath, dst))
-            throw new java.io.IOException(
-              s"snapshot repair: rename ${st.getPath} -> $dst failed")
-        }
-        fs.delete(staleRoot, true)
-      }
+      // crash repair: a bucket parked with no live twin means a previous
+      // run died inside its swap — restore it BEFORE reading `existing`,
+      // or those keys would silently vanish from the re-merged snapshot
+      Commit.healChildren(fs, root, "snapshot repair")
 
       // buckets this batch touches — bounded by nBuckets, never by |keys|
       val affected = picked
@@ -126,30 +114,17 @@ object Cdc {
         .filter(col("_op") =!= deleteOp).drop("_op")
         .withColumn("_bucket", pmod(hash(col("k")), lit(nBuckets)))
 
-      val tmp = path.stripSuffix("/") + "._merge_tmp"
-      merged.write.mode(SaveMode.Overwrite).partitionBy("_bucket").parquet(tmp)
-      // two-rename swap: park the live bucket, promote the fresh one.
-      // Either crash window is recoverable — before the promote, the
-      // repair pass restores the parked copy; after it, the parked copy
-      // is garbage and the replayed merge is idempotent anyway.
-      fs.mkdirs(staleRoot)
+      val tmp = Commit.stage(root)
+      merged.write.mode(SaveMode.Overwrite).partitionBy("_bucket").parquet(tmp.toString)
+      // per-bucket swap (a bucket absent from `tmp` lost every key and
+      // is swapped out for nothing); a crash is healed by the next
+      // merge, and the replayed merge is idempotent
+      fs.mkdirs(root)
       affected.foreach { b =>
-        val dst = new org.apache.hadoop.fs.Path(s"$path/_bucket=$b")
-        val src = new org.apache.hadoop.fs.Path(s"$tmp/_bucket=$b")
-        val stale = new org.apache.hadoop.fs.Path(staleRoot, s"_bucket=$b")
-        fs.mkdirs(dst.getParent)
-        // Hadoop rename reports failure by returning false; an unchecked
-        // park would let the promote rename INTO the still-live dst dir
-        // (nesting it as a child) and corrupt the snapshot — abort instead.
-        if (fs.exists(dst) && !fs.rename(dst, stale))
-          throw new java.io.IOException(
-            s"snapshot swap: park $dst -> $stale failed; aborting before promote")
-        if (fs.exists(src) && !fs.rename(src, dst))     // absent: bucket fully deleted
-          throw new java.io.IOException(
-            s"snapshot swap: promote $src -> $dst failed (parked copy at $stale)")
+        Commit.swap(fs, new org.apache.hadoop.fs.Path(root, s"_bucket=$b"),
+          new org.apache.hadoop.fs.Path(tmp, s"_bucket=$b"), "snapshot swap")
       }
-      fs.delete(staleRoot, true)
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
+      fs.delete(tmp, true)
     } finally picked.unpersist()
   }
 

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions._
+import graft.io.Commit
 import scala.util.control.NonFatal
 
 /** Similarity search over an `array<float>` embedding column
@@ -740,6 +741,7 @@ object Similarity {
                           dir: String, batch: DataFrame,
                           seg: Option[String] = None): Unit = {
     import graft.functions.VectorFunctions.signBands
+    healIndex(spark, dir)
     requireEpochCoherent(spark, dir, Seq("_meta"))
     // a PRE-SEGMENTATION flat tree (data files at the root, no seg=
     // dirs — the layout describeIndex reports as one synthetic
@@ -800,6 +802,7 @@ object Similarity {
   def compactBinaryIndex(spark: org.apache.spark.sql.SparkSession,
                          dir: String, keepSeg: Option[String] = None,
                          targetBytesPerFile: Long = 128L << 20): Unit = {
+    healIndex(spark, dir)
     requireEpochCoherent(spark, dir, Seq("_meta"))
     // size the folded tree from the live tree's byte footprint — the
     // flat tier has no cell structure to inherit a file count from
@@ -970,6 +973,7 @@ object Similarity {
     */
   def appendToIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
                        batch: DataFrame, seg: Option[String] = None): Unit = {
+    healIndex(spark, dir)
     requireEpochCoherent(spark, dir, Seq("_centroids"))
     writeAppend(ivfCorpusSide(batch, readIndexCentroids(spark, dir),
       storedIndexMeta(spark, dir)), dir, seg)
@@ -998,6 +1002,7 @@ object Similarity {
                          batch: DataFrame, seg: Option[String] = None): Unit = {
     import org.apache.spark.sql.GraftColumnBridge.{column => toCol, expression => toExpr}
     import graft.functions.PqEncodeExpr
+    healIndex(spark, dir)
     requireEpochCoherent(spark, dir, Seq("_centroids", "_codebooks"))
     val cbs = readIndexCodebooks(spark, dir)
     writeAppend(ivfCorpusSide(batch, readIndexCentroids(spark, dir),
@@ -1043,23 +1048,24 @@ object Similarity {
     *
     * Safe against the read-your-own-overwrite hazard (a same-dir
     * overwrite DELETES the input before the job reads it): the
-    * compacted copy is fully written to `<dir>.compacting`, then
-    * swapped in with two renames. A crash mid-swap leaves either the
-    * original live or `<dir>.old` alongside the new tree — both
-    * recoverable by hand, neither silently partial; the tmp tree is
-    * deleted up-front so a retried compaction never swaps in a stale
-    * half-write.
+    * compacted copy is fully written to the hidden stage
+    * `.<name>.tmp`, then swapped in through [[graft.io.Commit]]. A
+    * crash mid-swap leaves the original parked at `.<name>.old` or
+    * beside the new tree, and the next compaction heals it first;
+    * the stage is deleted up-front so a retried compaction never
+    * swaps in a stale half-write.
     */
   def compactIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
                    keepSeg: Option[String] = None): Unit = {
-    // compaction PRESERVES stored cells/codes and copies the model
-    // forward, so running it on a TORN index (data tree from one
-    // model epoch, tables from another) would cement the tear — and
-    // rewriteInPlace's prologue deletes the `.compacting*` trees that
-    // are the tear's roll-forward recovery material. Refuse up front;
-    // the recovery for a torn index is [[refitIvfPqIndex]] (it
-    // re-derives everything from the raw vectors) or the roll-forward
-    // rename the error message describes.
+    // heal FIRST (see healIndex). Compaction PRESERVES stored
+    // cells/codes and copies the model forward, so running it on a
+    // TORN index (data tree from one model epoch, tables from another)
+    // would cement the tear — and rewriteInPlace's prologue deletes
+    // the stage trees that are the tear's roll-forward recovery
+    // material. Refuse up front; the recovery for a torn index is
+    // [[refitIvfPqIndex]] (it re-derives everything from the raw
+    // vectors) or the roll-forward rename the error message describes.
+    healIndex(spark, dir)
     val suffixes = {
       val fs = new org.apache.hadoop.fs.Path(dir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1182,7 +1188,8 @@ object Similarity {
         "partitions) — a tombstone sidecar here would shadow nothing. " +
         "LSH indexes are catalog tables and sit outside the tombstone " +
         "contract.")
-    healTombstones(fs, dir) // never write beside a torn shrink's .old
+    // never write beside a torn shrink's park
+    Commit.heal(fs, new org.apache.hadoop.fs.Path(tombstoneDir(dir)), "deleteFromIndex")
     val tagged = ids.select(col("vec_id").as("c_id"))
       .withColumn("seg", lit(seg.getOrElse(
         "adhoc-" + java.util.UUID.randomUUID.toString.take(8))))
@@ -1200,43 +1207,24 @@ object Similarity {
     * one-column (`c_id`) frame — None when no delete was ever issued,
     * which is the common case and costs ONE directory probe with zero
     * plan change (the hot path stays byte-identical to pre-deletion).
+    *
+    * TORN-SWAP RECOVERY (r13 ADVICE): [[shrinkTombstones]]'s swap
+    * has a window where the live sidecar is ABSENT and its pre-shrink
+    * copy is parked — unlike the data trees (epoch markers), the
+    * sidecar has no coherence marker, and a read returning None there
+    * would silently resurrect every unpurged deleted row, in the
+    * PII-deletion path where it matters most. So every sidecar touch
+    * point, this read included, heals first
+    * ([[graft.io.Commit.heal]]): the parked tree rolls back in (a
+    * conservative SUPERSET of the needed tombstones — anti-joins over
+    * already-purged ids are no-ops), or a completed shrink's leftover
+    * park is deleted before anything could make the two diverge.
     */
-  /** TORN-SWAP RECOVERY (r13 ADVICE): [[shrinkTombstones]]'s rename
-    * pair has a window where the live sidecar is ABSENT but its
-    * pre-shrink copy survives at `.old` — unlike the data trees
-    * (epoch markers), the sidecar has no coherence marker, and a read
-    * returning None there would silently resurrect every unpurged
-    * deleted row — in the PII-deletion path, where it matters most.
-    * Heal eagerly at every sidecar touch point: live-absent + `.old`
-    * present ⇒ roll the `.old` tree back in (it is a conservative
-    * SUPERSET of the needed tombstones — anti-joins over already-
-    * purged ids are no-ops); both present ⇒ the shrink completed and
-    * the live tree is authoritative, so the leftover `.old` is
-    * deleted before anything (a fresh delete, another shrink) could
-    * make the two trees diverge.
-    */
-  private def healTombstones(fs: org.apache.hadoop.fs.FileSystem,
-                             dir: String): Unit = {
-    val td = tombstoneDir(dir)
-    val p = new org.apache.hadoop.fs.Path(td)
-    val old = new org.apache.hadoop.fs.Path(td + ".old")
-    def hasSegs(d: org.apache.hadoop.fs.Path): Boolean =
-      fs.exists(d) && fs.listStatus(d).exists(st =>
-        st.isDirectory && st.getPath.getName.startsWith("seg="))
-    if (hasSegs(old)) {
-      if (!hasSegs(p)) {
-        fs.delete(p, true) // a segless husk must not block the rename
-        require(fs.rename(old, p),
-          s"healTombstones: could not roll $old back into place")
-      } else fs.delete(old, true)
-    }
-  }
-
   private[graft] def tombstones(spark: org.apache.spark.sql.SparkSession,
                                 dir: String): Option[DataFrame] = {
     val p = new org.apache.hadoop.fs.Path(tombstoneDir(dir))
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    healTombstones(fs, dir)
+    Commit.heal(fs, p, "tombstones")
     if (!fs.exists(p) || !fs.listStatus(p).exists(st =>
         st.isDirectory && st.getPath.getName.startsWith("seg=")))
       None
@@ -1268,27 +1256,19 @@ object Similarity {
     val td = tombstoneDir(dir)
     val p = new org.apache.hadoop.fs.Path(td)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    healTombstones(fs, dir) // a prior shrink's torn swap rolls back first
+    Commit.heal(fs, p, "shrinkTombstones") // a prior shrink's torn swap first
     if (!fs.exists(p)) return
     keepSeg match {
       case None => fs.delete(p, true)
       case Some(s) =>
         val keptIds = spark.read.parquet(dir)
           .filter(col("seg") === lit(s)).select(col("c_id"))
-        val retained = spark.read.parquet(td)
+        val tmp = Commit.stage(p)
+        spark.read.parquet(td)
           .join(keptIds, Seq("c_id"), "left_semi")
           .select(col("c_id")).withColumn("seg", lit("base")).coalesce(1)
-        val tmp = new org.apache.hadoop.fs.Path(td + ".compacting")
-        fs.delete(tmp, true)
-        retained.write.partitionBy("seg").parquet(tmp.toString)
-        val old = new org.apache.hadoop.fs.Path(td + ".old")
-        fs.delete(old, true)
-        require(fs.rename(p, old),
-          s"shrinkTombstones: could not move $td aside")
-        require(fs.rename(tmp, p),
-          s"shrinkTombstones: could not move the shrunk tombstones in; " +
-            s"originals at $old")
-        fs.delete(old, true)
+          .write.mode("overwrite").partitionBy("seg").parquet(tmp.toString)
+        Commit.swap(fs, p, tmp, "shrinkTombstones")
     }
   }
 
@@ -1572,13 +1552,14 @@ object Similarity {
     * so probes read more; see [[appendToIvfIndex]]). Reads the stored
     * vectors back out of the index, fits fresh centroids + codebooks
     * on the union corpus exactly like a cold [[buildIvfPqIndex]], and
-    * swaps the rebuilt tree in with the same fail-safe rename dance
+    * swaps the rebuilt tree in with the same [[graft.io.Commit]] swap
     * as [[compactIndex]]. O(index) by design; every id present
     * before is present after (the spec pins it).
     */
   def refitIvfPqIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
                       nlist: Int = 16, m: Int = 8, ksub: Int = 16,
-                      seed: Long = 42L): Unit =
+                      seed: Long = 42L): Unit = {
+    healIndex(spark, dir)
     rewriteInPlace(spark, dir) { (rows, tmp) =>
       // localCheckpoint: the fit + assignment must read the OLD tree's
       // rows while the new tree is being written elsewhere — cutting
@@ -1594,16 +1575,18 @@ object Similarity {
       buildIvfPqIndex(corpus, tmp, nlist = nlist, m = m, ksub = ksub,
         seed = seed, metaCols = meta)
     }
+  }
 
   /** Shared fail-safe in-place rewrite: materialize the new tree at
-    * `<dir>.compacting` (model tables copied forward only if the
-    * rewrite didn't produce its own), then `dir` → `<dir>.old`,
-    * tmp → `dir`, delete `<dir>.old`, per tree. Loud on every
-    * filesystem step.
+    * the data tree's stage (`.<name>.tmp`, [[graft.io.Commit.stage]];
+    * model tables beside it as `.<name>.tmp_centroids` etc., copied
+    * forward only if the rewrite didn't produce its own), then swap
+    * each tree in through [[graft.io.Commit.swap]]. Loud on every
+    * filesystem step. Callers heal the index first ([[healIndex]]).
     *
     * The data tree and the model tables are SEPARATE directories, so
-    * the swap cannot be one atomic rename — a crash between the
-    * renames can leave new data beside an old model (after a refit
+    * the swap cannot be one atomic rename — a crash between two trees'
+    * swaps can leave new data beside an old model (after a refit
     * that combination returns WRONG NEIGHBORS: probes assign queries
     * with stale centroids and ADC decodes new codes with old
     * codebooks, no error anywhere). The model-EPOCH guard closes that
@@ -1611,9 +1594,9 @@ object Similarity {
     * prefix — parquet readers ignore it), builds/refits stamp one
     * fresh UUID across all trees, compaction carries the old one
     * forward, and every read/append path requires all present trees
-    * to agree ([[requireEpochCoherent]]) — a torn swap fails loudly
-    * on first use instead of serving silently wrong results, with
-    * `.old` trees on disk for recovery.
+    * to agree ([[requireEpochCoherent]]) — a torn refit fails loudly
+    * on first use instead of serving silently wrong results. A crash
+    * INSIDE one tree's swap is healed by the next writer.
     */
   private def rewriteInPlace(spark: org.apache.spark.sql.SparkSession,
                              dir: String,
@@ -1621,10 +1604,10 @@ object Similarity {
                                Seq("_centroids", "_codebooks"))
                             (write: (DataFrame, String) => Unit): Unit = {
     val base = dir.stripSuffix("/")
-    val tmpBase = base + ".compacting"
     val hconf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(base).getFileSystem(hconf)
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
+    val fs = p(base).getFileSystem(hconf)
+    val tmpBase = Commit.stage(p(base)).toString
     // a stale tmp tree from a crashed run must never be swapped in
     (tmpBase +: suffixes.map(tmpBase + _))
       .foreach(t => fs.delete(p(t), true))
@@ -1635,8 +1618,8 @@ object Similarity {
     // fresh ones next to tmp
     suffixes.foreach { suf =>
       if (!fs.exists(p(tmpBase + suf)) && fs.exists(p(base + suf)))
-        org.apache.hadoop.fs.FileUtil.copy(fs, p(base + suf), fs,
-          p(tmpBase + suf), false, hconf)
+        require(org.apache.hadoop.fs.FileUtil.copy(fs, p(base + suf), fs,
+          p(tmpBase + suf), false, hconf), s"rewriteInPlace: could not copy $base$suf")
     }
     // the rewritten DATA tree needs its epoch restored/written:
     // Spark's write produced it without a marker. Compaction keeps
@@ -1645,17 +1628,21 @@ object Similarity {
     // so only stamp when absent.
     if (readEpoch(fs, tmpBase).isEmpty)
       readEpoch(fs, base).foreach(e => stampEpoch(fs, tmpBase, e))
-    def swap(suf: String): Unit = if (fs.exists(p(tmpBase + suf))) {
-      val old = p(base + suf + ".old")
-      fs.delete(old, true)
-      require(fs.rename(p(base + suf), old),
-        s"rewriteInPlace: could not move $base$suf aside — index left untouched")
-      require(fs.rename(p(tmpBase + suf), p(base + suf)),
-        s"rewriteInPlace: could not move the rebuilt tree into place — " +
-          s"original preserved at $old")
-      fs.delete(old, true)
-    }
-    ("" +: suffixes).foreach(swap)
+    // a model table absent from both sides stays absent
+    ("" +: suffixes).foreach(suf =>
+      Commit.swap(fs, p(base + suf), p(tmpBase + suf), "rewriteInPlace"))
+  }
+
+  /** [[graft.io.Commit.heal]] each tree of the index at `dir`. Index
+    * writers call it on entry, BEFORE the epoch check: an interrupted
+    * swap reads as a torn index or a missing table. Reads never heal. */
+  private def healIndex(spark: org.apache.spark.sql.SparkSession,
+                        dir: String): Unit = {
+    val base = dir.stripSuffix("/")
+    val fs = new org.apache.hadoop.fs.Path(base)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Seq("", "_centroids", "_codebooks", "_meta").foreach(suf =>
+      Commit.heal(fs, new org.apache.hadoop.fs.Path(base + suf), "healIndex"))
   }
 
   /** Model-epoch marker plumbing (see [[rewriteInPlace]]'s doc for
@@ -1707,7 +1694,9 @@ object Similarity {
   private def clearTombstones(spark: org.apache.spark.sql.SparkSession,
                               dir: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(tombstoneDir(dir))
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // the park too: a heal would roll a torn shrink's park back in
+    Seq(p, Commit.park(p)).foreach(fs.delete(_, true))
   }
 
   /** Refuse to read or append through a TORN index: all present
@@ -1729,15 +1718,15 @@ object Similarity {
         present.map(_._2).distinct.size == 1,
       s"index at $dir is TORN — model-epoch markers disagree " +
         s"(${epochs.map { case (s, e) => s"'$s'=${e.getOrElse("<absent>")}" }
-          .mkString(", ")}): a compaction/refit swap did not complete. " +
-        "Recover by (a) rolling FORWARD: rename any surviving " +
-        s"$dir.compacting* trees over their live counterparts (they " +
-        "hold the interrupted rewrite's consistent versions), (b) " +
-        "rolling BACK from any <tree>.old directories (present only " +
-        "if the crash hit inside one swap's rename pair), or (c) " +
-        "refitIvfPqIndex — it re-derives the model and every stored " +
-        "cell/code from the raw vectors, which are valid regardless " +
-        "of the tear.")
+          .mkString(", ")}): a refit's swaps did not all complete. " +
+        "Recover by (a) refitIvfPqIndex — it re-derives the model and " +
+        "every stored cell/code from the raw vectors, which are valid " +
+        "regardless of the tear — or (b) rolling FORWARD: rename each " +
+        s"surviving stage tree ${Commit.stage(new org.apache.hadoop.fs.Path(dir.stripSuffix("/")))}" +
+        "[_centroids|_codebooks|_meta] over its live counterpart (the " +
+        "stages hold the interrupted rewrite's consistent versions). A " +
+        "crash inside one tree's swap leaves a parked `.<tree>.old`; " +
+        "the next compaction, refit or append heals it, no manual step.")
   }
 
   /** Top-k against a [[buildIvfPqIndex]] directory. Centroids and

@@ -56,10 +56,10 @@ object AvroSink {
     * the original (duplicate files from both attempts finishing are
     * the at-least-once cost; exactly-once file sinks need a commit
     * protocol — that path here is the checkpointed parquet sink).
-    * Each attempt writes to a hidden `.…tmp` name and renames to the
-    * final name only after the Avro container is closed, so a FAILED
-    * attempt never leaves a truncated (unparseable) visible file — the
-    * dot prefix also hides stray temps from Spark/Hadoop readers.
+    * Each file commits through [[graft.io.Commit.writeFile]]: it is
+    * written under a hidden stage name and renamed to the final name
+    * only after the Avro container is closed, so a FAILED attempt
+    * never leaves a truncated (unparseable) visible file.
     * I/O goes through the Hadoop FileSystem API with the driver's
     * configuration, so shared storage works from executors (local
     * `java.io.File` would write each executor's own disk).
@@ -82,41 +82,34 @@ object AvroSink {
         val fs = org.apache.hadoop.fs.FileSystem.get(
           new java.net.URI(dir), org.apache.spark.util.GraftConfBridge.value(conf))
         val name = s"part-${tc.taskAttemptId()}-${tc.partitionId()}.avro"
-        val tmpPath = new org.apache.hadoop.fs.Path(s"$dir/.$name.tmp")
         val finalPath = new org.apache.hadoop.fs.Path(s"$dir/$name")
-        val out = fs.create(tmpPath, false)
-        val w = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](schema))
-        w.create(schema, out)
-        var committed = false
-        try { rows.foreach { row =>
-          val rec = new GenericData.Record(schema)
-          var i = 0
-          while (i < names.length) {
-            val v = if (row.isNullAt(i)) null else types(i) match {
-              case TimestampType => // true epoch micros: millis + sub-ms nanos
-                val t = row.getTimestamp(i)
-                java.lang.Long.valueOf(
-                  Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L)
-              case TimestampNTZType =>
-                val ldt = row.getAs[java.time.LocalDateTime](i)
-                java.lang.Long.valueOf(
-                  ldt.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L +
-                    ldt.getNano / 1000L)
-              case StringType => row.getString(i)
-              case _ => row.get(i).asInstanceOf[AnyRef]
+        graft.io.Commit.writeFile(fs, finalPath, "AvroSink") { out =>
+          val w = new DataFileWriter[GenericRecord](
+            new GenericDatumWriter[GenericRecord](schema))
+          w.create(schema, out)
+          rows.foreach { row =>
+            val rec = new GenericData.Record(schema)
+            var i = 0
+            while (i < names.length) {
+              val v = if (row.isNullAt(i)) null else types(i) match {
+                case TimestampType => // true epoch micros: millis + sub-ms nanos
+                  val t = row.getTimestamp(i)
+                  java.lang.Long.valueOf(
+                    Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L)
+                case TimestampNTZType =>
+                  val ldt = row.getAs[java.time.LocalDateTime](i)
+                  java.lang.Long.valueOf(
+                    ldt.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L +
+                      ldt.getNano / 1000L)
+                case StringType => row.getString(i)
+                case _ => row.get(i).asInstanceOf[AnyRef]
+              }
+              rec.put(names(i), v)
+              i += 1
             }
-            rec.put(names(i), v)
-            i += 1
+            w.append(rec)
           }
-          w.append(rec)
-        }
           w.close()                    // flush + container footer
-          if (!fs.rename(tmpPath, finalPath))
-            throw new java.io.IOException(s"rename $tmpPath -> $finalPath failed")
-          committed = true
-        } finally if (!committed) {
-          try w.close() catch { case _: Throwable => () }
-          try fs.delete(tmpPath, false) catch { case _: Throwable => () }
         }
       }
     }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
 
+import graft.io.Commit
+
 /** Sink-side routing (reference §2.2).
   *
   * The reference fans a micro-batch out to per-(coin, interval)
@@ -45,9 +47,10 @@ object Routing {
     * micro-batch per partition; at scale the file count, not the
     * bytes, kills scan planning. Re-writes `path` into
     * ceil(totalBytes / targetFileBytes) files, sized from the scan's
-    * own `_metadata.file_size` (no filesystem listing pass). Write to
-    * a fresh directory then swap — an object store would commit via
-    * rename/manifest; the read-back-equality contract is pinned in
+    * own `_metadata.file_size` (no filesystem listing pass). The
+    * rewrite is staged beside `path` and swapped in through
+    * [[graft.io.Commit]], which first heals a crashed earlier
+    * compaction; the read-back-equality contract is pinned in
     * `AvroSinkSpec`.
     */
   def compact(spark: org.apache.spark.sql.SparkSession, path: String,
@@ -56,6 +59,7 @@ object Routing {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
     val dst = new org.apache.hadoop.fs.Path(path)
+    Commit.heal(fs, dst, "compact")
     // a Hive-partitioned source (writePartitioned/routedParquet layout)
     // must be rewritten WITH partitionBy, or the directory scheme — and
     // partition pruning — is silently flattened away. Detect the layout
@@ -69,29 +73,10 @@ object Routing {
       .dropDuplicates("f")
       .agg(org.apache.spark.sql.functions.sum("sz")).head().getLong(0)
     val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-    val tmp = path.stripSuffix("/") + "._compact_tmp"
+    val tmp = Commit.stage(dst)
     val w = df.repartition(nFiles).write.mode(SaveMode.Overwrite)
-    (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).parquet(tmp)
-    // crash-safe swap: park the live dir, promote the fresh one, then
-    // drop the parked copy. A crash leaves either the parked dir (data
-    // intact, rename it back) or both (promotion done, delete parked) —
-    // never a window with NO live data, which delete-then-rename had.
-    // Hadoop rename reports failure by RETURNING FALSE (it rarely
-    // throws), so every step is checked: a failed promotion rolls the
-    // parked original back and aborts — falling through to the delete
-    // would destroy the only copy.
-    val parked = new org.apache.hadoop.fs.Path(
-      path.stripSuffix("/") + "._compact_old")
-    fs.delete(parked, true)
-    if (!fs.rename(dst, parked))
-      throw new java.io.IOException(s"compact: could not park $dst")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), dst)) {
-      val rolledBack = fs.rename(parked, dst)
-      throw new java.io.IOException(
-        s"compact: promotion of $tmp failed" +
-          (if (rolledBack) "; original restored" else s"; ORIGINAL LEFT AT $parked"))
-    }
-    fs.delete(parked, true)
+    (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).parquet(tmp.toString)
+    Commit.swap(fs, dst, tmp, "compact")
     nFiles
   }
 

@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.streaming.StreamingQueryListener._
 
+import graft.io.Commit
+
 /** Per-trigger telemetry for long-running streams, persisted as an
   * ordinary parquet table — the operational record a 100 TB ingest
   * needs: at a 60 s trigger a single pipeline commits ~1,440 batches
@@ -46,10 +48,10 @@ import org.apache.spark.sql.streaming.StreamingQueryListener._
   * O(history/threshold), and compact-before-append means the rows
   * being appended are never part of the tree being swapped), and
   * [[Telemetry.retain]] drops history older than a cutoff. Both use
-  * the per-partition fail-safe swap ([[compact]]): new file written
-  * beside the partition, then dir → `.old`, new → dir, `.old`
-  * deleted — a crash at any step leaves either the old or the new
-  * tree intact on disk, and the next maintenance call heals the
+  * the per-partition fail-safe swap of [[graft.io.Commit]]: new file
+  * staged beside the partition under a hidden name, then swapped in
+  * — a crash at any step leaves either the old or the new tree intact
+  * on disk, and the next flush or maintenance call heals the
   * leftovers. Single-maintenance-thread assumption as with the index
   * family: call flush/compact/retain from ONE monitoring tick, not
   * concurrently.
@@ -79,8 +81,11 @@ object Telemetry {
       * job (disable with autoCompactFiles = 0 at [[Telemetry.attach]]).
       */
     def flush(): Long = {
-      if (autoCompactFiles > 0 && !queue.isEmpty)
-        compact(spark, outDir, autoCompactFiles)
+      // compact heals first even when it folds nothing: rows appended
+      // beside a crashed swap's park would make the park look like a
+      // completed swap's leftover
+      if (!queue.isEmpty) compact(spark, outDir,
+        if (autoCompactFiles > 0) autoCompactFiles else Int.MaxValue)
       import spark.implicits._
       var rows = List.empty[(String, String, String, Long, String,
         Long, Double, Double, Long, Long, Long, String)]
@@ -185,14 +190,11 @@ object Telemetry {
   }
 
   /** Shared per-partition fail-safe rewrite: for each `query_name=`
-    * dir selected by `part`, write `transform(partition rows)` as one
-    * file to `<part>.compacting`, then swap dir → `.old`, new → dir,
-    * delete `.old`. Crash-safe by construction: the data exists in
-    * full at every step (old tree, or new tree, or both under
-    * different names), and entry-time healing finishes an interrupted
-    * swap — `.old` beside a live dir is a completed swap's debris
-    * (delete), `.old` without a live dir is an interrupted one
-    * (rename back).
+    * dir selected by `part`, stage `transform(partition rows)` as one
+    * file and swap it in through [[graft.io.Commit]]. The stage and
+    * the park are hidden names, so reads of `outDir` never see them,
+    * and entry-time healing finishes or undoes a crashed prior
+    * rewrite's swaps.
     */
   private def rewritePartitions(spark: SparkSession, outDir: String,
                                 part: Path => Boolean,
@@ -201,57 +203,28 @@ object Telemetry {
     val root = new Path(outDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return 0
+    Commit.healChildren(fs, root, "Telemetry")
     var folded = 0
     fs.listStatus(root).filter(st => st.isDirectory &&
       st.getPath.getName.startsWith("query_name=")).foreach { st =>
       val dir = st.getPath
-      if (dir.getName.endsWith(".old")) {
-        // crashed prior rewrite: live twin present → swap completed,
-        // drop the debris; absent → swap interrupted, roll back
-        val live = new Path(root,
-          dir.getName.stripSuffix(".old"))
-        if (fs.exists(live)) fs.delete(dir, true)
-        else require(fs.rename(dir, live), s"heal rename failed: $dir")
-      } else if (dir.getName.endsWith(".compacting")) {
-        // a surviving tmp means the swap never started (it is deleted
-        // by rename on success) — drop it before it shadows a real
-        // partition in reads or gets folded as one
-        fs.delete(dir, true)
-      }
-    }
-    fs.listStatus(root).filter(st => st.isDirectory &&
-      st.getPath.getName.startsWith("query_name=") &&
-      !st.getPath.getName.endsWith(".old") &&
-      !st.getPath.getName.endsWith(".compacting")).foreach { st =>
-      val dir = st.getPath
       if (part(dir)) {
-        val tmp = new Path(root, dir.getName + ".compacting")
-        if (fs.exists(tmp)) fs.delete(tmp, true) // stale crashed tmp
+        val tmp = Commit.stage(dir)
         // partition files carry every column BUT the partition key —
         // a plain directory read/write round-trips that layout
         transform(spark.read.parquet(dir.toString))
           .coalesce(1)
           .write.mode("overwrite").parquet(tmp.toString)
-        // zero surviving rows → drop the partition entirely, NEVER
-        // swap it in: whether Spark emits a zero-row part file is
-        // version-dependent (a file-less dir would poison schema
-        // inference on the next read; a zero-row file is dead weight
-        // that still costs a footer per read). Deleting makes the
-        // outcome deterministic either way — reads simply stop
-        // seeing this query_name, the correct answer for "retention
-        // removed its every row". The row probe is footer-bounded
-        // (isEmpty = limit 1 over one freshly-written file).
-        val emptied = dataFiles(spark, tmp).isEmpty ||
-          spark.read.parquet(tmp.toString).isEmpty
-        if (emptied) {
+        // zero surviving rows → swap the partition out for NOTHING:
+        // whether Spark emits a zero-row part file is version-dependent
+        // (a file-less dir poisons schema inference on the next read; a
+        // zero-row file costs a footer per read forever), and reads
+        // then simply stop seeing this query_name. The row probe is
+        // footer-bounded (isEmpty = limit 1 over one fresh file).
+        if (dataFiles(spark, tmp).isEmpty ||
+            spark.read.parquet(tmp.toString).isEmpty)
           fs.delete(tmp, true)
-          fs.delete(dir, true)
-        } else {
-          val old = new Path(root, dir.getName + ".old")
-          require(fs.rename(dir, old), s"swap-out rename failed: $dir")
-          require(fs.rename(tmp, dir), s"swap-in rename failed: $tmp")
-          fs.delete(old, true)
-        }
+        Commit.swap(fs, dir, tmp, "Telemetry")
         folded += 1
       }
     }

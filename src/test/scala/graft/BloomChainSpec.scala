@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.util.sketch.BloomFilter
@@ -11,17 +10,6 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.time.SpanSugar._
 
 import graft.etl.DedupIngest
-
-/** Local filesystem under the `failbloom` scheme whose rename returns
-  * `false` (Hadoop's failure signal, no exception) when the target's
-  * name equals the `graft.test.failRenameTo` setting.
-  */
-class FailRenameFileSystem extends RawLocalFileSystem {
-  override def getUri: java.net.URI = java.net.URI.create("failbloom:///")
-  override def rename(src: Path, dst: Path): Boolean =
-    if (Option(getConf.get("graft.test.failRenameTo")).contains(dst.getName)) false
-    else super.rename(src, dst)
-}
 
 /** The incremental admission's Bloom chain (`admitBatchIncremental`):
   * the blob each trigger writes, its loud failure, and the labels on
@@ -89,15 +77,14 @@ class BloomChainSpec extends AnyFunSuite with SparkTestBase with Eventually {
   }
 
   test("a failed bloom rename fails the trigger before any fps or docs commit") {
-    val conf = spark.sparkContext.hadoopConfiguration
-    conf.set("fs.failbloom.impl", classOf[FailRenameFileSystem].getName)
-    conf.set("fs.failbloom.impl.disable.cache", "true")
+    CrashFileSystem.install(spark)
     val root = Files.createTempDirectory("chain-fail").toString
-    val (dir, cp) = (s"failbloom://$root/corpus", s"failbloom://$root/cp")
+    val (dir, cp) = (s"crash://$root/corpus", s"crash://$root/cp")
     try {
       assert(admit(dir, cp, 0L, Seq((0L, "a"), (1L, "b"))) == 2L)
       assert(admit(dir, cp, 1L, Seq((2L, "c"))) == 1L)
-      conf.set("graft.test.failRenameTo", "bloom-t-2")
+      // the new blob's rename is the trigger's first commit step
+      CrashFileSystem.arm(1, crash = false)
       val e = intercept[java.io.IOException](
         admit(dir, cp, 2L, Seq((3L, "c"), (4L, "d"))))
       assert(e.getMessage.contains("writeBloom"), e.getMessage)
@@ -106,15 +93,14 @@ class BloomChainSpec extends AnyFunSuite with SparkTestBase with Eventually {
       assert(!Files.exists(Paths.get(root, "corpus_fps", "_ingest_batch=t-2")))
       assert(!Files.exists(Paths.get(root, "corpus", "_ingest_batch=t-2")))
       // the replay, once the rename works, admits only the new key
-      conf.unset("graft.test.failRenameTo")
+      CrashFileSystem.disarm()
       assert(admit(dir, cp, 2L, Seq((3L, "c"), (4L, "d"))) == 1L)
       assert(spark.read.parquet(s"$root/corpus").select("doc_id", "text")
         .as[(Long, String)].collect().toSet ==
         Set((0L, "a"), (1L, "b"), (2L, "c"), (4L, "d")))
     } finally {
-      conf.unset("graft.test.failRenameTo")
-      conf.unset("fs.failbloom.impl")
-      conf.unset("fs.failbloom.impl.disable.cache")
+      CrashFileSystem.disarm()
+      CrashFileSystem.uninstall(spark)
     }
   }
 

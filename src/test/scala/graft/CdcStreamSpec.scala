@@ -99,14 +99,12 @@ class CdcStreamSpec extends AnyFunSuite with SparkTestBase {
     merge(Seq((1L, 1L, "U", 10.0), (2L, 1L, "U", 20.0)))
     // crash injection: a previous run parked key 1's bucket (first swap
     // rename done) and died before promoting the fresh copy — the live
-    // dir is gone, only the ._stale twin remains
+    // dir is gone, only its parked twin remains
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
     val live = new org.apache.hadoop.fs.Path(s"$path/_bucket=${bucket(1L)}")
-    val staleRoot = new org.apache.hadoop.fs.Path(s"$path._stale")
-    fs.mkdirs(staleRoot)
-    assert(fs.rename(live, new org.apache.hadoop.fs.Path(
-      staleRoot, s"_bucket=${bucket(1L)}")))
+    val staleRoot = graft.io.Commit.park(live)
+    assert(fs.rename(live, staleRoot))
     assert(!fs.exists(live))
 
     // the next merge (touching a DIFFERENT key) must first repair:
@@ -119,16 +117,16 @@ class CdcStreamSpec extends AnyFunSuite with SparkTestBase {
 
     // other crash window: promote done, parked copy left behind — the
     // repair pass must PREFER the live (newer) bucket and just clean up
-    fs.mkdirs(staleRoot)
     val live2 = new org.apache.hadoop.fs.Path(s"$path/_bucket=${bucket(2L)}")
-    fs.mkdirs(new org.apache.hadoop.fs.Path(staleRoot, s"_bucket=${bucket(2L)}"))
+    val staleRoot2 = graft.io.Commit.park(live2)
+    fs.mkdirs(staleRoot2)
     assert(fs.exists(live2))
     merge(Seq((1L, 2L, "U", 11.0)))
     val snap2 = Cdc.snapshot(spark, path)
       .select("k", "v").as[(Long, Double)].collect().sortBy(_._1)
     assert(snap2.toSeq === Seq((1L, 11.0), (2L, 25.0)),
       "stale leftover must not clobber the promoted bucket")
-    assert(!fs.exists(staleRoot))
+    assert(!fs.exists(staleRoot2))
   }
 
   test("a delete-only batch can empty the snapshot without breaking reads") {

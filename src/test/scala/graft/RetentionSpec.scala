@@ -150,7 +150,7 @@ class RetentionSpec extends AnyFunSuite with SparkTestBase {
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val td = new org.apache.hadoop.fs.Path(dir + "_tombstones")
-    val old = new org.apache.hadoop.fs.Path(dir + "_tombstones.old")
+    val old = graft.io.Commit.park(td)
     // the shrink crash window: sidecar moved aside, replacement absent
     assert(fs.rename(td, old), "fixture: could not stage the torn state")
     val q = Seq((999L, rows(3)._2)).toDF("vec_id", "embedding")

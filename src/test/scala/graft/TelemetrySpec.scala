@@ -145,13 +145,11 @@ class TelemetrySpec extends AnyFunSuite with SparkTestBase {
       assert(Telemetry.compact(spark, out, maxFiles = 0) === 1)
       assert(files() === 1)
       assert(lag() === before)
-      // crash healing: an interrupted swap (.old, no live dir) rolls
-      // back; a stale .compacting is dropped before it shadows reads
-      val old = new org.apache.hadoop.fs.Path(out,
-        "query_name=telemetry_c.old")
+      // crash healing: an interrupted swap (park, no live dir) rolls
+      // back; a stale stage is dropped
+      val old = graft.io.Commit.park(part)
       require(fs.rename(part, old))
-      val stale = new org.apache.hadoop.fs.Path(out,
-        "query_name=telemetry_c.compacting")
+      val stale = graft.io.Commit.stage(part)
       fs.mkdirs(stale)
       assert(Telemetry.compact(spark, out, maxFiles = 64) === 0)
       assert(fs.exists(part) && !fs.exists(old) && !fs.exists(stale))
@@ -182,5 +180,29 @@ class TelemetrySpec extends AnyFunSuite with SparkTestBase {
     } finally {
       q.stop(); rec.stop()
     }
+  }
+
+  test("a rewrite's stage and park partitions stay hidden from reads of the table") {
+    val out = tmp("telemetry-hidden") + "/t"
+    Seq(("q1", 0L, 500L), ("q1", 1L, 20L), ("q2", 0L, 700L))
+      .toDF("query_name", "batch_id", "batch_duration_ms")
+      .withColumn("batch_ts", lit("2026-01-01T00:00:00.000Z"))
+      .withColumn("input_rows", lit(1L)).withColumn("state_rows", lit(0L))
+      .write.partitionBy("query_name").parquet(out)
+    def names = spark.read.parquet(out).select("query_name").distinct()
+      .as[String].collect().sorted.toSeq
+    def lagging = Telemetry.laggingBatches(spark, out, triggerMs = 100L)
+      .select("query_name", "batch_id").as[(String, Long)].collect().toSeq
+    val (namesBefore, laggingBefore) = (names, lagging)
+    // what a crash mid-rewrite leaves: the staged copy and the park
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    val part = new org.apache.hadoop.fs.Path(out, "query_name=q1")
+    Seq(graft.io.Commit.stage(part), graft.io.Commit.park(part)).foreach(p =>
+      assert(org.apache.hadoop.fs.FileUtil.copy(fs, part, fs, p, false,
+        spark.sparkContext.hadoopConfiguration)))
+    assert(namesBefore == Seq("q1", "q2"))
+    assert(names == namesBefore)
+    assert(lagging == laggingBefore)
+    assert(spark.read.parquet(out).count() == 3L)
   }
 }
