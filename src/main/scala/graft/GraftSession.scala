@@ -20,6 +20,23 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
+  /** Label the Spark jobs `body`'s actions spawn with `desc` (the
+    * `spark.job.description` the Spark UI and listeners show), so a
+    * pipeline's per-trigger time can be split per step instead of
+    * guessed from job counts. Costs a local-property set per call,
+    * nothing per row. [[graft.tools.ComposedProbe]]'s listener sums
+    * the labels per stage.
+    */
+  def described[T](spark: SparkSession, desc: String)(body: => T): T = {
+    // restore, not clear: the streaming engine labels every job of a
+    // trigger with its batch description, and the jobs after this
+    // action belong to the same trigger
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(desc)
+    try body finally sc.setLocalProperty("spark.job.description", prev)
+  }
+
   def tune(b: SparkSession.Builder): SparkSession.Builder = b
     .config("spark.sql.extensions", "graft.GraftExtensions")
     .config("spark.sql.session.timeZone", "UTC")

@@ -3,6 +3,7 @@ package graft.etl
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.GraftSession.described
 import graft.io.Commit
 import graft.ops.Dedup
 
@@ -44,24 +45,6 @@ import graft.ops.Dedup
   * provision; see the geometry note there).
   */
 object DedupIngest {
-
-  /** Label the Spark jobs one admission action spawns — per-stage
-    * telemetry for the composed pipelines (r12 VERDICT #2: the
-    * `deduped_binary` capacity number was attributed to "the
-    * admission join dominates" with no stage breakdown). Costs a
-    * local-property set per ACTION (nothing per row); the labels show
-    * up in the Spark UI and are summed per stage by
-    * [[graft.tools.ComposedProbe]]'s listener.
-    */
-  private[graft] def described[T](spark: SparkSession, desc: String)(body: => T): T = {
-    // restore, not clear: the streaming engine labels every job of a
-    // trigger with its batch description, and the jobs after this
-    // action belong to the same trigger
-    val sc = spark.sparkContext
-    val prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(desc)
-    try body finally sc.setLocalProperty("spark.job.description", prev)
-  }
 
   /** True iff `dir` holds at least one COMMITTED data file. Directory
     * existence alone is the wrong bootstrap signal: a crash mid-write

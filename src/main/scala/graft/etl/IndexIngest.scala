@@ -2,6 +2,7 @@ package graft.etl
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.GraftSession.described
 import graft.ops.Similarity
 
 /** Streaming maintenance of a persisted ANN index
@@ -313,10 +314,10 @@ object IndexIngest {
     if (n > 0) {
       // stage labels match the admission stage's so one listener sums
       // the whole trigger
-      DedupIngest.described(spark, "index:compact")(
+      described(spark, "index:compact")(
         maybeCompact(spark, indexDir, s"$tag-$batchId", autoCompactSegments,
           Similarity.compactBinaryIndex(_, _, _)))
-      DedupIngest.described(spark, "index:append")(
+      described(spark, "index:append")(
         Similarity.appendToBinaryIndex(spark, indexDir,
           admittedOf(spark, corpusDir, s"$tag-$batchId", idCol, embCol),
           seg = Some(s"$tag-$batchId")))

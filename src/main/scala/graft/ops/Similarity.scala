@@ -1554,12 +1554,19 @@ object Similarity {
     * on the union corpus exactly like a cold [[buildIvfPqIndex]], and
     * swaps the rebuilt tree in with the same [[graft.io.Commit]] swap
     * as [[compactIndex]]. O(index) by design; every id present
-    * before is present after (the spec pins it).
+    * before is present after (the spec pins it). Like compaction it
+    * folds every segment's ingest stamp into `base` ([[foldSegMeta]]).
     */
   def refitIvfPqIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
                       nlist: Int = 16, m: Int = 8, ksub: Int = 16,
                       seed: Long = 42L): Unit = {
     healIndex(spark, dir)
+    // the stage's build stamps its own `_segmeta`, which no swap moves:
+    // clear a crashed run's copy first, drop this run's after the swap
+    val stageSegMeta = new org.apache.hadoop.fs.Path(segMetaDir(
+      Commit.stage(new org.apache.hadoop.fs.Path(dir.stripSuffix("/"))).toString))
+    val fs = stageSegMeta.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(stageSegMeta, true)
     rewriteInPlace(spark, dir) { (rows, tmp) =>
       // localCheckpoint: the fit + assignment must read the OLD tree's
       // rows while the new tree is being written elsewhere — cutting
@@ -1575,6 +1582,8 @@ object Similarity {
       buildIvfPqIndex(corpus, tmp, nlist = nlist, m = m, ksub = ksub,
         seed = seed, metaCols = meta)
     }
+    fs.delete(stageSegMeta, true)
+    foldSegMeta(spark, dir, None)
   }
 
   /** Shared fail-safe in-place rewrite: materialize the new tree at

@@ -207,28 +207,6 @@ object Routing {
     } finally conn.close()
   }
 
-  /** Keyed JDBC upsert via standard SQL MERGE, executor-parallel and
-    * batched. Replaying a micro-batch re-MERGEs the same (key, value)
-    * rows — a no-op — so `foreachBatch(upsertJdbc(...))` + checkpoint
-    * gives an exactly-once EFFECT on the database even though the
-    * delivery is at-least-once (the upgrade over the reference's blind
-    * append, which duplicates on every replay; its Kafka re-fetches
-    * make replays routine). Per-partition transactions: a partition's
-    * rows land atomically; retries of a failed task re-merge cleanly.
-    *
-    * The statement is dialect-routed by [[upsertStatement]]: ANSI
-    * MERGE for Derby/DB2-family (executed for real in `JdbcSpec`),
-    * `INSERT ... ON CONFLICT DO UPDATE` for PostgreSQL (golden-text
-    * asserted — no Postgres server in the sandbox).
-    *
-    * A batch may carry several rows for one key; Spark guarantees no
-    * intra-partition order after a repartition, so "last row wins"
-    * would be nondeterministic. The batch is therefore reduced to ONE
-    * row per key before merging: the row with the greatest `orderCol`
-    * when given (ties nondeterministic — use a total order per key),
-    * else the greatest value tuple (arbitrary but deterministic, so
-    * replays converge).
-    */
   /** Dialect-routed single-row upsert statement + the row-index bind
     * order for its `?` parameters.
     *
@@ -244,12 +222,19 @@ object Routing {
     * base table), values bound through `CAST(? AS <type>)` because
     * Derby cannot infer parameter types, and a spelled-out
     * IS-NOT-DISTINCT-FROM key match (NULL = NULL is UNKNOWN, which
-    * would re-INSERT a replayed NULL-keyed row every time).
+    * would re-INSERT a replayed NULL-keyed row every time). Derby
+    * cannot probe an index with that OR, so every row scans the whole
+    * table; `exactKeys = true` gives the plain `t.K = CAST(? AS T)`
+    * match instead (keys bound once), which a key index answers. For
+    * a row with no NULL key both forms match the same target rows, so
+    * [[upsertJdbc]] sends such rows to the exact form and NULL-keyed
+    * rows to the null-safe one. PostgreSQL ignores the flag.
     */
   private[graft] def upsertStatement(
       jdbcUrl: String, table: String,
       schema: org.apache.spark.sql.types.StructType,
-      keyCols: Seq[String]): (String, Array[Int]) = {
+      keyCols: Seq[String],
+      exactKeys: Boolean = false): (String, Array[Int]) = {
     import org.apache.spark.sql.types._
     def sqlType(dt: DataType): String = dt match {
       case LongType => "BIGINT"
@@ -287,19 +272,60 @@ object Routing {
       // raw rendering would choke on kline columns that are reserved
       // words (TIMESTAMP, OPEN, CLOSE, YEAR, ...)
       def q(c: String) = "\"" + c.toUpperCase + "\""
+      val on =
+        if (exactKeys) keyCols.map(k => s"t.${q(k)} = ${cast(k)}")
+        else keyCols.map(k =>
+          s"(t.${q(k)} = ${cast(k)} OR (t.${q(k)} IS NULL AND ${cast(k)} IS NULL))")
       val sql =
         s"""MERGE INTO $table t USING SYSIBM.SYSDUMMY1 d
-           |ON ${keyCols.map(k =>
-          s"(t.${q(k)} = ${cast(k)} OR (t.${q(k)} IS NULL AND ${cast(k)} IS NULL))").mkString(" AND ")}
+           |ON ${on.mkString(" AND ")}
            |WHEN MATCHED THEN UPDATE SET ${valCols.map(c => s"${q(c)} = ${cast(c)}").mkString(", ")}
            |WHEN NOT MATCHED THEN INSERT (${cols.map(q).mkString(", ")})
            |VALUES (${cols.map(cast).mkString(", ")})""".stripMargin
-      // parameter order = ON keys (each twice), SET values, INSERT row
-      ((sql, (keyCols.flatMap(k => Seq(k, k)) ++ valCols ++ cols)
-        .map(schema.fieldIndex).toArray))
+      // parameter order = ON keys (each twice when null-safe), SET
+      // values, INSERT row
+      val onBind = if (exactKeys) keyCols else keyCols.flatMap(k => Seq(k, k))
+      (sql, (onBind ++ valCols ++ cols).map(schema.fieldIndex).toArray)
     }
   }
 
+  /** Keyed JDBC upsert via standard SQL MERGE, executor-parallel and
+    * batched. Replaying a micro-batch re-MERGEs the same (key, value)
+    * rows — a no-op — so `foreachBatch(upsertJdbc(...))` + checkpoint
+    * gives an exactly-once EFFECT on the database even though the
+    * delivery is at-least-once (the upgrade over the reference's blind
+    * append, which duplicates on every replay; its Kafka re-fetches
+    * make replays routine). Per-partition transactions: a partition's
+    * rows land atomically; retries of a failed task re-merge cleanly.
+    *
+    * The statement is dialect-routed by [[upsertStatement]]: ANSI
+    * MERGE for Derby/DB2-family (executed for real in `JdbcSpec`),
+    * `INSERT ... ON CONFLICT DO UPDATE` for PostgreSQL (golden-text
+    * asserted — the tests run no Postgres server).
+    *
+    * On Derby each row's match should be an index lookup, not a table
+    * scan, or a batch costs O(rows × table) and grows for as long as
+    * the stream runs. So a row whose key columns are all non-null is
+    * bound to the exact-key MERGE, which Derby answers from a unique
+    * index on the key (e.g. `KlinePipeline.KlineDdl`'s UNIQUE
+    * constraint); a row with a NULL key keeps the null-safe MERGE,
+    * which scans. Both statements run in the same chunk transaction
+    * and flush together. The two never touch the same target row (a
+    * NULL key column differs from every non-null one), so their order
+    * within a flush does not matter. A table without a key index
+    * (e.g. one created before `KlineDdl` had its constraint) stays
+    * correct but scans for every row. The one-writer Derby clamp
+    * below was measured before the index existed and is kept, not
+    * re-measured.
+    *
+    * A batch may carry several rows for one key; Spark guarantees no
+    * intra-partition order after a repartition, so "last row wins"
+    * would be nondeterministic. The batch is therefore reduced to ONE
+    * row per key before merging: the row with the greatest `orderCol`
+    * when given (ties nondeterministic — use a total order per key),
+    * else the greatest value tuple (arbitrary but deterministic, so
+    * replays converge).
+    */
   def upsertJdbc(df: DataFrame, jdbcUrl: String, table: String,
                  keyCols: Seq[String], props: java.util.Properties,
                  orderCol: Option[String] = None,
@@ -309,7 +335,10 @@ object Routing {
     val valCols = cols.filterNot(keyCols.contains)
     require(valCols.nonEmpty && keyCols.forall(cols.contains),
       s"upsertJdbc: keys $keyCols must be a proper subset of $cols")
-    val (mergeSql, bindOrder) = upsertStatement(jdbcUrl, table, schema, keyCols)
+    val (safeSql, safeBind) = upsertStatement(jdbcUrl, table, schema, keyCols)
+    val (exactSql, exactBind) =
+      upsertStatement(jdbcUrl, table, schema, keyCols, exactKeys = true)
+    val keyIdx = keyCols.map(schema.fieldIndex).toArray
     // one row per key per batch (see scaladoc) — groupBy treats NULL
     // keys as equal, matching the MERGE's IS-NOT-DISTINCT-FROM match.
     // ONE max_by over the packed value struct (not one per column):
@@ -339,7 +368,8 @@ object Routing {
     // MERGE, so extra writers buy only wait cycles (observed: the
     // same batch 1 s single-writer vs 25 s behind intermittent
     // multi-second lock waits at 8) — an embedded single-node store
-    // has no parallel-write upside to trade for that
+    // has no parallel-write upside to trade for that (measured before
+    // the exact-key MERGE; see the scaladoc)
     val conns =
       if (jdbcUrl.startsWith("jdbc:derby")) 1
       else math.max(1, maxConnections)
@@ -366,9 +396,18 @@ object Routing {
           val conn = java.sql.DriverManager.getConnection(jdbcUrl, props)
           try {
             conn.setAutoCommit(false)
-            val ps = conn.prepareStatement(mergeSql)
+            val exact = conn.prepareStatement(exactSql)
+            // PostgreSQL: one statement serves both kinds of row
+            val safe =
+              if (safeSql == exactSql) exact else conn.prepareStatement(safeSql)
+            def flush(): Unit = {
+              exact.executeBatch()
+              if (safe ne exact) safe.executeBatch()
+            }
             var n = 0
             chunk.foreach { r =>
+              val (ps, bindOrder) =
+                if (keyIdx.exists(r.isNullAt)) (safe, safeBind) else (exact, exactBind)
               var i = 0
               while (i < bindOrder.length) {
                 ps.setObject(i + 1, r.get(bindOrder(i)))
@@ -376,9 +415,9 @@ object Routing {
               }
               ps.addBatch()
               n += 1
-              if (n % 500 == 0) ps.executeBatch()
+              if (n % 500 == 0) flush()
             }
-            ps.executeBatch()
+            flush()
             conn.commit()
             done = true
           } catch {

@@ -13,7 +13,7 @@ import graft.GraftSession
   * ([[graft.etl.IndexIngest.dedupedBinaryAppendBatch]] — the same
   * function the stream's foreachBatch calls) over batch-sized static
   * frames against a growing corpus, with the admission stages labeled
-  * via job descriptions ([[graft.etl.DedupIngest]]'s `described`) and
+  * via job descriptions ([[graft.GraftSession.described]]) and
   * summed per batch by a SparkListener. It measures the production
   * plan, so the corpus band-join probe and the in-batch pairing run
   * as one action and report together under `admit:probe+pairs`.

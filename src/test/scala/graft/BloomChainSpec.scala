@@ -108,11 +108,11 @@ class BloomChainSpec extends AnyFunSuite with SparkTestBase with Eventually {
     val sc = spark.sparkContext
     sc.setJobDescription("outer")
     try {
-      assert(DedupIngest.described(spark, "inner")(
+      assert(GraftSession.described(spark, "inner")(
         sc.getLocalProperty("spark.job.description")) == "inner")
       assert(sc.getLocalProperty("spark.job.description") == "outer")
     } finally sc.setJobDescription(null)
-    DedupIngest.described(spark, "inner")(())
+    GraftSession.described(spark, "inner")(())
     assert(sc.getLocalProperty("spark.job.description") == null)
   }
 

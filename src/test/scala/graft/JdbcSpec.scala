@@ -101,6 +101,61 @@ class JdbcSpec extends AnyFunSuite with SparkTestBase {
     assert(dbyBind.toSeq == Seq(0, 0, 1, 2, 0, 1, 2))
   }
 
+  test("derby exact-key MERGE: plain key equality, each key bound once") {
+    val schema = Seq(("BTC", 1L, 10.0)).toDF("coin", "ts", "price").schema
+    val (exSql, exBind) =
+      Routing.upsertStatement(url, "latest", schema, Seq("coin"), exactKeys = true)
+    assert(exSql ==
+      """MERGE INTO latest t USING SYSIBM.SYSDUMMY1 d
+        |ON t."COIN" = CAST(? AS VARCHAR(32672))
+        |WHEN MATCHED THEN UPDATE SET "TS" = CAST(? AS BIGINT), "PRICE" = CAST(? AS DOUBLE)
+        |WHEN NOT MATCHED THEN INSERT ("COIN", "TS", "PRICE")
+        |VALUES (CAST(? AS VARCHAR(32672)), CAST(? AS BIGINT), CAST(? AS DOUBLE))""".stripMargin)
+    assert(!exSql.contains("IS NULL"))
+    // ON keys once, SET values, INSERT row
+    assert(exBind.toSeq == Seq(0, 1, 2, 0, 1, 2))
+    // the null-safe form is what the flag's default still gives
+    val (safeSql, _) = Routing.upsertStatement(url, "latest", schema, Seq("coin"))
+    assert(safeSql.contains("IS NULL") && safeSql != exSql)
+    // PostgreSQL's ON CONFLICT has one form for both kinds of row
+    val pg = "jdbc:postgresql://db:5432/graft"
+    val (pgEx, pgExBind) =
+      Routing.upsertStatement(pg, "latest", schema, Seq("coin"), exactKeys = true)
+    val (pgSafe, pgSafeBind) = Routing.upsertStatement(pg, "latest", schema, Seq("coin"))
+    assert(pgEx == pgSafe && pgExBind.toSeq == pgSafeBind.toSeq)
+  }
+
+  test("MERGE upsert, keyed table: NULL-key and non-null-key rows in one batch") {
+    val ddl = "coin VARCHAR(16), iv VARCHAR(8), ts BIGINT, price DOUBLE, UNIQUE (coin, iv)"
+    Routing.ensureTable(url, "keyed", ddl, props)
+    val keys = Seq("coin", "iv")
+    // exactly these rows, each once (a stacked NULL key would hide in a Set)
+    def assertRows(want: Set[(String, String, Long, Double)]): Unit = {
+      val got = spark.read.jdbc(url, "keyed", props).collect()
+        .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getDouble(3)))
+      assert(got.length === want.size && got.toSet === want)
+    }
+    // a fully non-null key takes the exact-key MERGE; a key with any
+    // NULL column takes the null-safe one
+    val b1 = Seq[(String, String, Long, Double)](("BTC", "1m", 1L, 10.0),
+      ("ETH", "1m", 2L, 20.0), (null, "1m", 3L, 30.0), ("BTC", null, 4L, 40.0),
+      (null, null, 5L, 50.0)).toDF("coin", "iv", "ts", "price")
+    Routing.upsertJdbc(b1, url, "keyed", keys, props)
+    // replay: every key matches, nothing stacks (the UNIQUE constraint
+    // would refuse a stacked non-null key; NULL keys it lets through)
+    Routing.upsertJdbc(b1, url, "keyed", keys, props)
+    assertRows(b1.as[(String, String, Long, Double)].collect().toSet)
+    // updates of both kinds plus an insert, in one chunk transaction
+    val b2 = Seq[(String, String, Long, Double)](("BTC", "1m", 6L, 11.0),
+      (null, "1m", 7L, 31.0), ("BTC", null, 8L, 41.0), ("SOL", "1m", 9L, 90.0))
+      .toDF("coin", "iv", "ts", "price")
+    Routing.upsertJdbc(b2, url, "keyed", keys, props)
+    Routing.upsertJdbc(b2, url, "keyed", keys, props)
+    assertRows(Set(("BTC", "1m", 6L, 11.0),
+      ("ETH", "1m", 2L, 20.0), (null, "1m", 7L, 31.0), ("BTC", null, 8L, 41.0),
+      (null, null, 5L, 50.0), ("SOL", "1m", 9L, 90.0)))
+  }
+
   test("upsert reduces a multi-row-per-key batch deterministically") {
     val b0 = Seq(("BTC", 0L, 0.0)).toDF("coin", "ts", "price")
     Routing.ensureTableAndAppend(b0.limit(0), url, "latest2",

@@ -141,6 +141,30 @@ class RetentionSpec extends AnyFunSuite with SparkTestBase {
       .toSet == (40L until 60L).toSet)
   }
 
+  test("refitIvfPqIndex folds segment stamps into base and leaves no stage sidecar") {
+    val root = java.nio.file.Files.createTempDirectory("graft-refit-meta").toString
+    val dir = s"$root/ivfpq"
+    Similarity.buildIvfPqIndex(vecs(0 until 40).toDF("vec_id", "embedding"), dir,
+      nlist = 4, m = 8, ksub = 16)
+    Similarity.appendToIvfPqIndex(spark, dir,
+      vecs(40 until 60).toDF("vec_id", "embedding"), seg = Some("s1"))
+    Similarity.stampSegMeta(spark, dir, "base", 1000L)
+    Similarity.stampSegMeta(spark, dir, "s1", 3000L)
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val stageMeta = new org.apache.hadoop.fs.Path(
+      graft.io.Commit.stage(new org.apache.hadoop.fs.Path(dir)).toString + "_segmeta")
+    // a crashed refit's stage sidecar must not survive the next one
+    fs.create(new org.apache.hadoop.fs.Path(stageMeta, "stale")).close()
+    Similarity.refitIvfPqIndex(spark, dir, nlist = 4, m = 8, ksub = 16)
+    assert(!fs.exists(stageMeta), s"stage sidecar left behind: $stageMeta")
+    assert(Similarity.segmentNames(spark, dir) == Seq("base"))
+    // the folded stamp is the max of the fold sources, as compaction's
+    assert(Similarity.readSegMeta(spark, dir) == Map("base" -> 3000L))
+    assert(spark.read.parquet(dir).select("c_id").as[Long].collect().toSet ==
+      (0L until 60L).toSet)
+  }
+
   test("tombstone torn swap heals: .old rolls back when live is absent, clears when live exists") {
     val root = java.nio.file.Files.createTempDirectory("graft-heal").toString
     val dir = s"$root/bin"
