@@ -13,7 +13,6 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // attempts per query (driver default 2 = best-of-2); the big
     // scale sweeps (sf25) run 1 to keep the wall clock sane
     val attempts = sys.env.getOrElse("SPARK_GRAFT_BENCH_ATTEMPTS", "2").toInt
@@ -43,13 +42,7 @@ object Bench {
     val excludedHit = all.keySet.intersect(excluded).toSeq.sorted
     // data-sized AQE shuffle width (see GraftSession.tuneFor): no-op
     // at gate scales, 128+ initial partitions at sf25
-    val spark = GraftSession.tuneFor(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus),
-      sfDir, cpus.toInt
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.forMain(sfDir)
 
     def execute(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
                 dir: String): Unit =

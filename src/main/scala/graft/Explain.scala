@@ -1,27 +1,20 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Dumps `explain formatted` for every catalog query — the plan-review
   * loop the brief mandates (pushdown reached the scan? dims broadcast?
   * whole-stage codegen spans wide?). Usage:
   *   runMain graft.Explain <sfDir> <outDir> [names...]
-  * Core count from $SPARK_GRAFT_CPUS (default 4 — the historical dump
-  * harness width, kept so re-dumps stay comparable to committed ones;
-  * set 32 to dump plans whose data-sized widths differ from the
-  * 4-core session's).
+  * Runs under Bench's session ([[GraftSession.forMain]]: core count
+  * from $SPARK_GRAFT_CPUS, default 4, and the data-sized shuffle width
+  * of [[GraftSession.tuneFor]]), so a dump shows the plans Bench runs.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.tune(
-      SparkSession.builder().master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.forMain(sfDir)
     Files.createDirectories(Paths.get(outDir))
     SparkEntry.catalog.foreach { q =>
       if (only.isEmpty || only.contains(q.name)) try {

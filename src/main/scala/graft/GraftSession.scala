@@ -24,8 +24,9 @@ object GraftSession {
     * `spark.job.description` the Spark UI and listeners show), so a
     * pipeline's per-trigger time can be split per step instead of
     * guessed from job counts. Costs a local-property set per call,
-    * nothing per row. [[graft.tools.ComposedProbe]]'s listener sums
-    * the labels per stage.
+    * nothing per row. A listener keyed on the description sums the
+    * labels per stage (the per-stage tables in SCALE.md, "Streaming
+    * performance").
     */
   def described[T](spark: SparkSession, desc: String)(body: => T): T = {
     // restore, not clear: the streaming engine labels every job of a
@@ -170,6 +171,27 @@ object GraftSession {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
       "true")
+
+  /** The session every command-line main (Bench, Verify, Explain and
+    * the `graft.tools` harnesses) runs under: `local[cores]` with cores
+    * from `SPARK_GRAFT_CPUS` (default 4), shuffle partitions = cores,
+    * [[tuneFor]] on `dataDir`, and Spark's log level set to
+    * `logLevel`. One builder, so an A/B or a plan dump sees exactly the
+    * configuration Bench measures. A `dataDir` with no parquet under it
+    * (the streaming harness passes "") sizes the shuffle width to the
+    * cores, as [[tune]] does.
+    */
+  def forMain(dataDir: String, logLevel: String = "ERROR"): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val s = tuneFor(
+      SparkSession.builder()
+        .master(s"local[$cpus]")
+        .config("spark.sql.shuffle.partitions", cpus.toString),
+      dataDir, cpus
+    ).getOrCreate()
+    s.sparkContext.setLogLevel(logLevel)
+    s
+  }
 
   /** Local session for tests / ad-hoc runs. Shuffle partitions = cores:
     * on a real cluster this would instead be sized to keep post-shuffle

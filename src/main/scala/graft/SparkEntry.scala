@@ -195,10 +195,10 @@ object SparkEntry {
     * the gate is a hash match. */
   private lazy val EmbAnnOracleSql: String = embAnnOracleSql(8, 4)
 
-  /** Parameterized so the scale sweeps (tools.AnnProbe) can emit the
-    * matching oracle for the adaptive choice at sf1/sf5 (7–10 bits),
-    * while the catalog pins the gate-scale choice (8 bands × 4 bits —
-    * what [[graft.ops.Dedup.annParams]] resolves to at ≤2000 rows). */
+  /** Parameterized so [[oracleSqlForCounts]] can emit the matching
+    * oracle for the adaptive choice at sf1/sf5 (7–10 bits), while the
+    * catalog pins the gate-scale choice (8 bands × 4 bits — what
+    * [[graft.ops.Dedup.annParams]] resolves to at ≤2000 rows). */
   private[graft] def embAnnOracleSql(bands: Int, bits: Int): String = {
     val planes = Similarity.hyperplanes(bands * bits, 64, 42L)
     def dotSql(p: Array[Double]) =
@@ -1615,7 +1615,7 @@ object SparkEntry {
       // enumeration forms measure 85.8 s (block-quadratic, 26M Myers)
       // and 189 s (segment index — candidates duplicated per planted
       // dup pair) while collapsed is output-bound (18.8M pairs),
-      // which is the floor. Numbers: tools.FuzzyProbe.
+      // which is the floor. Numbers: SCALE.md, "What sf1/sf5 caught".
       Some("""SELECT l.p_partkey AS a_key, r.p_partkey AS b_key,
              |       CAST(levenshtein(l.p_name, r.p_name) AS BIGINT) AS dist
              |FROM part l JOIN part r
@@ -2071,10 +2071,11 @@ object SparkEntry {
       // one banded sign-LSH seed (Dedup.semanticNearDupPairsHybrid).
       // Cells-only recall thins at LOW thresholds at scale (r6 weak
       // #3); the LSH tier's misses are angular, uncorrelated with
-      // cell geometry, so the union lifts every floor (tools.SemProbe:
-      // θ=0.35 floors 1.00/0.94/0.89 at sf0.01/0.1/1 vs 1.00/0.82/
-      // 0.84 cells-only; θ=0.6 at sf1: 0.875→1.000). The RECALL
-      // CONTRACT is pinned to the θ ≥ 0.6 regime SemDeDup actually
+      // cell geometry, so the union lifts every floor (SCALE.md,
+      // "Semantic-dedup recall floors": θ=0.35 floors 1.00/0.94/0.89
+      // at sf0.01/0.1/1 vs 1.00/0.82/0.84 cells-only; θ=0.6 at sf1:
+      // 0.875→1.000). The RECALL CONTRACT is pinned to the θ ≥ 0.6
+      // regime SemDeDup actually
       // targets (Abbas et al. dedup at high similarity): hybrid
       // per-label floor ≥ 0.6 at EVERY recorded sf (worst observed
       // 0.714 at sf5/θ=0.6; 1.000 at sf1). At θ below the regime the
@@ -2087,7 +2088,7 @@ object SparkEntry {
       // candidate volume, or the exact per-label baseline on a
       // bounded slice. This gate runs θ=0.35 because the fixture has
       // no θ≥0.6 pairs at the driver's scales (the check would be
-      // vacuous there) — within-contract behavior is what SemProbe
+      // vacuous there) — within-contract behavior is what SCALE.md
       // records per sf. The quantizer isn't SQL-expressible, so the
       // gate shape is RECALL (same as ext_sim_ivf): per fixture
       // label, the hybrid pass must recover ≥ 60 % of the exact
@@ -2237,8 +2238,8 @@ object SparkEntry {
       // SQL-expressible, so the pinned contract is RECALL like
       // ext_sim_pq: ≥ 3 of the exact cosine top-10 per query with the
       // same corpus-scaled rerank budget (4% of n, floor 100/cap 10k);
-      // measured per-query min hits (tools.BinaryProbe) recorded in
-      // COVERAGE.md — bound kept at 3 for family-uniform drift
+      // measured per-query min hits recorded in COVERAGE.md — bound
+      // kept at 3 for family-uniform drift
       // headroom.
       Some("""SELECT vec_id AS q_id, true AS recall_ok
              |FROM embeddings WHERE vec_id % 50 = 0""".stripMargin),
@@ -2442,7 +2443,7 @@ object SparkEntry {
       // sampled gap distribution barely separates easy from hard, so
       // the calibrated margin lands high (−0.15/0.19/0.33 at
       // sf0.01/0.1/1) and escalation is eager — measured min hits
-      // 4/3/4 vs narrow's 4/2/2 (tools.AdaptiveProbe, r10); on the
+      // 4/3/4 vs narrow's 4/2/2 (r10, SCALE.md); on the
       // CLUSTERED fixture the same rule calibrates 0.21, escalates
       // 5.1% and runs 0.51x the fixed-wide wall at the identical
       // below3=0 floor (SCALE.md r10 table) — one rule, measured on
@@ -2488,8 +2489,8 @@ object SparkEntry {
       // scan covers ALL qualifying codes (under-return then means
       // fewer than k qualifying neighbors exist). Same contract as
       // ext_sim_filtered: recall vs the FILTERED exact cosine top-10,
-      // >= 3-of-10, corpus-scaled rerank; measured floors
-      // (tools.BinaryProbe ivfpqfiltered) in SCALE.md.
+      // >= 3-of-10, corpus-scaled rerank; measured floors in SCALE.md
+      // ("Filtered search on the persisted IVF-PQ family").
       Some("""SELECT vec_id AS q_id, true AS recall_ok
              |FROM embeddings WHERE vec_id % 50 = 0""".stripMargin),
       (s, dir) => {
@@ -2631,7 +2632,8 @@ object SparkEntry {
       // the worst sf0.1 query sat exactly ON the bound (min hits 3 —
       // zero drift headroom); two extra probed cells buy it back.
       // Measured per-query min hits at nprobe=8: 8 at sf0.01, 4 at
-      // sf0.1, 5 at sf1 (tools.AppendProbe) — within one hit of the
+      // sf0.1, 5 at sf1 (SCALE.md, "Correctness at sf1") — within one
+      // hit of the
       // full-build path, as frozen-model assignment predicts on
       // uniform data.
       Some("""SELECT vec_id AS q_id, true AS recall_ok
@@ -2666,7 +2668,7 @@ object SparkEntry {
       // NOT-YET-APPENDED delta searched by exact brute force and
       // merged into the per-query top-k. Same recall contract as the
       // family, measured per-query min hits 9/8/6 at sf0.01/0.1/1
-      // (tools.AppendProbe delta mode) — ABOVE the appended twin (the
+      // (SCALE.md has the sf5 row) — ABOVE the appended twin (the
       // delta side is exact where the index side approximates, so
       // half the corpus contributes perfect hits). Deltas are
       // batch-sized by
@@ -2715,8 +2717,8 @@ object SparkEntry {
       // VERDICT #5 regime-derived-radius hypothesis was implemented,
       // measured per rung, and REFUTED: radius 2 at its own bound
       // misses the floor at EVERY rung and worse with more bits
-      // (below3 1/400 → 8/1607 → 16/1139 at sf1/5/25, min 0 at sf25;
-      // tools.AppendProbe lshdelta), so the 2.5× mask bill is
+      // (below3 1/400 → 8/1607 → 16/1139 at sf1/5/25, min 0 at sf25),
+      // so the 2.5× mask bill is
       // load-bearing recall, not insurance — numbers at the constant's
       // scaladoc and SCALE.md. The query slice is bounded by the SAME
       // radius through the shared probeMaskCount, so bound and probe
@@ -3859,8 +3861,8 @@ object SparkEntry {
       // one 5-column scan total) and runs its own 2-stage distinct.
       // Measured 3× faster than the single-pass multi-distinct form,
       // whose Catalyst Expand multiplies every row ×6 before the
-      // shuffle (tools.ProfileProbe). NDV is SIZE-SWITCHED (VERDICT r7
-      // next #5): exact count_distinct up to profileExactNdvMax rows —
+      // shuffle (ARCHITECTURE.md, the `ext_profile_columns` bullet).
+      // NDV is SIZE-SWITCHED (VERDICT r7 next #5): exact count_distinct up to profileExactNdvMax rows —
       // covering every oracle gate scale, so the exact-NDV contract
       // below holds wherever it is checked — and the one-pass HLL++
       // sketch (approx_count_distinct, rsd 2 %) beyond, where an exact
@@ -4390,7 +4392,8 @@ object SparkEntry {
         // while the PARAMETERS stay sized from the FULL corpus
         // (annParams/semSeedsFor via n), so the sweep measures the
         // contract configuration's per-row cost at fixed work.
-        // tools.SemProbe records the floor itself, full-corpus.
+        // SCALE.md's "Semantic-dedup recall floors" sections record
+        // the floor itself, full-corpus.
         val n = Tables.cachedCount(s, dir, "embeddings")
         val emb = Tables.embeddings(s, dir)
         val capped =

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,14 +8,7 @@ object Verify {
     // optional 3rd arg: only run queries whose name contains any of the
     // comma-separated substrings
     val nameFilters = args.lift(2).getOrElse("").split(',').toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.tuneFor(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus),
-      sfDir, cpus.toInt
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.forMain(sfDir, logLevel = "WARN")
     new java.io.File(outDir).mkdirs()
     // A query that throws must be LOUD: besides stderr, every failure is
     // recorded in outDir/errors.json (name → first exception line) so a

@@ -382,7 +382,7 @@ object DedupIngest {
     // unpersisted the streaming SOURCE would be re-read 3-4× per
     // trigger — for a Kafka range that is 3-4 broker re-fetches per
     // batch, and the per-source numInputRows metric counts every
-    // scan (observed 3.4× inflation in the StreamingPerf telemetry
+    // scan (observed 3.4× inflation in the r11 streaming telemetry
     // before this boundary; the corpus row count was the truth). One
     // cache fill reads the source exactly once.
     val stable = batch.persist()
@@ -573,7 +573,7 @@ object DedupIngest {
         ()
       }
     // named queries key the telemetry table's partitions (the
-    // Telemetry.healthView / StreamingPerf join key)
+    // Telemetry.healthView join key)
     queryName.fold(w)(w.queryName).start()
   }
 

@@ -17,7 +17,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * bitvector step per text char) with no per-call allocation — the
   * Peq table lives in a stamped thread-local, so the hot loop is
   * ~6 bitwise ops per character. Measured ~8× on the blocked fuzzy
-  * self-join's verification pass (tools.FuzzyProbe).
+  * self-join's verification pass (ARCHITECTURE.md, the
+  * `functions.EditDistanceKernel` bullet).
   *
   * Fast path requires both sides ASCII with the shorter ≤ 64 chars
   * (one machine word); anything else falls back to the built-in

@@ -12,9 +12,9 @@ import org.apache.spark.sql.types._
   * `(value, id)` pairs ordered (value DESC, id ASC), evaluated as a
   * [[TypedImperativeAggregate]] so the buffer is two primitive
   * k-arrays mutated in place — no per-row object allocation, no
-  * typed-Dataset serialization boundary ([[graft.ops.TopK.TopKAgg]],
-  * the `Aggregator` form, plans an `AppendColumns` that deserializes
-  * every input row out of Tungsten; this expression reads its inputs
+  * typed-Dataset serialization boundary (an `Aggregator` form plans
+  * an `AppendColumns` that deserializes every input row out of
+  * Tungsten; this expression reads its inputs
   * straight off the aggregate's input row and keeps the producing
   * stage inside whole-stage codegen). Same execution shape as Spark's
   * own collect_top_k / hll_sketch_agg.

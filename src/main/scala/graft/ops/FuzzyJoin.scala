@@ -50,7 +50,8 @@ object FuzzyJoin {
     * verify step quadratic in DISTINCT texts per block and leaves the
     * output expansion as a broadcast/equi join that just streams —
     * the query becomes output-bound, which at 18.8M result pairs (sf1)
-    * is the floor. Measured at sf1 (tools.FuzzyProbe): 4.3 s here vs
+    * is the floor. Measured at sf1 (SCALE.md, "What sf1/sf5 caught"):
+    * 4.3 s here vs
     * 85.8 s block-quadratic (26M Myers calls) vs 164 s segment index
     * (211M candidates — every planted dup pair collides on every
     * segment). Never worse than enumeration (distinct ≤ rows; one

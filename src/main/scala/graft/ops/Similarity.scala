@@ -239,8 +239,9 @@ object Similarity {
     // level: partition pruning on cell is value-based and works at
     // any nesting depth, but directory COUNT is level-order-sensitive
     // — cell-outer nests one seg dir under every cell (nlist extra
-    // dirs per segment: +20% write / +8% probe in the controlled A/B,
-    // tools.LayoutAbProbe at nlist=400), while seg-outer measures
+    // dirs per segment: +20% write / +8% probe in the controlled A/B
+    // at nlist=400, recorded in ARCHITECTURE.md's incremental-append
+    // bullet), while seg-outer measures
     // IDENTICAL to the un-segmented layout (1.32 vs 1.32 s write,
     // 0.95 vs 0.95 s probe) and keeps each ingest batch's files
     // co-located (the natural unit for retention or compaction).
@@ -1844,9 +1845,10 @@ object Similarity {
   /** The adaptive probe's escalation set (one `q_id` column): queries
     * whose narrow pass `first` is beatable — fewer than `k` rows
     * returned, or kth cosine below the first unprobed centroid's
-    * cosine plus `margin`. Factored out so the evidence probe
-    * (`tools.AdaptiveProbe`) measures the EXACT escalation fraction
-    * the query path acts on, not an estimate.
+    * cosine plus `margin`. Factored out so an evidence run measures
+    * the EXACT escalation fraction the query path acts on, not an
+    * estimate ([[adviseProbeMode]] does; the r10 runs are in SCALE.md,
+    * "Adaptive IVF-PQ probe").
     */
   private[graft] def adaptiveEscalations(queries: DataFrame, first: DataFrame,
                                          centroids: Array[Array[Double]],
@@ -2113,7 +2115,8 @@ object Similarity {
     * escalate — the eager behavior the uniform recall floors require.
     * On clustered data the same rule yields a SMALL margin and the
     * wide pass prices only the tail. One rule, fixture-appropriate
-    * cost — measured in `tools.AdaptiveProbe` on both fixtures.
+    * cost — measured on both fixtures (SCALE.md, "Adaptive IVF-PQ
+    * probe").
     *
     * Cost: one bounded brute-force (|sample| × corpus — calibrate
     * with a few hundred queries, the sample size bounds the work at
@@ -2714,8 +2717,8 @@ object Similarity {
     * VERDICT #5 hypothesis behind a regime-derived radius (drop back
     * to 2 where adaptive bits are sized to hold buckets at ~target,
     * "per-neighbor bucket recall rises with bits") is REFUTED by
-    * measurement, which is why this stayed a constant: the
-    * `tools.AppendProbe lshdelta` protocol (r12) ran both radii at
+    * measurement, which is why this stayed a constant: the r12
+    * protocol (SCALE.md, "LSH delta probe radius") ran both radii at
     * their own catalog query bounds per rung —
     *
     *   sf1  (8 bits):  radius 2 min=2 below3=1/400;  radius 3 min=4, 0

@@ -1,15 +1,15 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Encoder}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Per-group top-k WITHOUT sorting the group.
   *
   * The window form (`row_number().over(partitionBy(g).orderBy(v))`)
   * shuffles and fully sorts every group; at 100 TB the sort of the
-  * heavy groups dominates. This typed [[Aggregator]] instead keeps a
-  * bounded k-row buffer per key, so:
+  * heavy groups dominates. The bounded aggregate
+  * ([[graft.functions.TopKPairsAgg]]) instead keeps a k-row buffer
+  * per key, so:
   *   - map-side partial aggregation reduces each partition to ≤ k rows
   *     per key BEFORE the shuffle (the shuffle carries k·parts rows,
   *     not the group);
@@ -21,52 +21,12 @@ import org.apache.spark.sql.functions._
   */
 object TopK {
 
-  /** One candidate row: the ranked value and its unique tiebreak id. */
-  final case class VK(v: Double, id: Long)
-
-  private val ord: Ordering[VK] =
-    Ordering.by((x: VK) => (-x.v, x.id))
-
-  /** Insert into a descending-sorted, ≤ k-element buffer. */
-  private def insert(buf: List[VK], x: VK, k: Int): List[VK] = {
-    val (le, gt) = buf.span(ord.lteq(_, x))
-    val merged = le ::: (x :: gt)
-    if (merged.lengthCompare(k) > 0) merged.take(k) else merged
-  }
-
-  /** Merge two sorted buffers keeping k (standard merge walk). */
-  private def mergeSorted(a: List[VK], b: List[VK], k: Int): List[VK] = {
-    val out = List.newBuilder[VK]
-    var (x, y, n) = (a, b, 0)
-    while (n < k && (x.nonEmpty || y.nonEmpty)) {
-      if (y.isEmpty || (x.nonEmpty && ord.lteq(x.head, y.head))) {
-        out += x.head; x = x.tail
-      } else { out += y.head; y = y.tail }
-      n += 1
-    }
-    out.result()
-  }
-
-  final class TopKAgg(k: Int) extends Aggregator[VK, List[VK], Seq[VK]] {
-    override def zero: List[VK] = Nil
-    override def reduce(b: List[VK], a: VK): List[VK] = insert(b, a, k)
-    override def merge(b1: List[VK], b2: List[VK]): List[VK] =
-      mergeSorted(b1, b2, k)
-    override def finish(r: List[VK]): Seq[VK] = r
-    override def bufferEncoder: Encoder[List[VK]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[List[VK]]()
-    override def outputEncoder: Encoder[Seq[VK]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[VK]]()
-  }
-
   /** The native-expression top-k column ([[graft.functions.TopKPairsAgg]]):
-    * array<struct<v,id>> of the k largest (value, id) pairs. Both
-    * public entry points below plan THIS — the typed [[TopKAgg]]
-    * stays as the pure-Dataset-API reference implementation (its
-    * `AppendColumns` deserializes every row out of Tungsten; the
-    * native form reads inputs off the aggregate input row and keeps
-    * the producing stage in whole-stage codegen — tools.TopKProbe
-    * measures the two).
+    * array<struct<v,id>> of the k largest (value, id) pairs. Every
+    * entry point below plans THIS: it reads its inputs off the
+    * aggregate input row and keeps the producing stage in whole-stage
+    * codegen, where a typed `Aggregator` would plan an
+    * `AppendColumns` that deserializes every row out of Tungsten.
     */
   private def topKCol(value: org.apache.spark.sql.Column,
                       id: org.apache.spark.sql.Column, k: Int,
@@ -103,28 +63,6 @@ object TopK {
       .select(col(groupCol), posexplode(col("topk")).as(Seq("pos", "vk")))
       .select(col(groupCol), (col("pos") + 1).cast("long").as("rnk"),
         col("vk.v").as(valueCol), col("vk.id").as(idCol))
-
-  /** The typed-Aggregator form of [[topKPerGroup]], kept ONLY as the
-    * measured alternative (tools.TopKProbe) and parity witness — it
-    * plans an `AppendColumns` serialization boundary per input row.
-    */
-  private[graft] def topKPerGroupTyped(df: DataFrame, groupCol: String,
-                                       valueCol: String, idCol: String,
-                                       k: Int): DataFrame = {
-    import df.sparkSession.implicits._
-    val ds = df.select(col(groupCol).cast("string"),
-        col(valueCol).cast("double"), col(idCol).cast("long"))
-      .filter(col(valueCol).isNotNull && col(idCol).isNotNull)
-      .as[(String, Double, Long)]
-    val agg = new TopKAgg(k)
-    ds.groupByKey(_._1)
-      .mapValues(t => VK(t._2, t._3))
-      .agg(agg.toColumn.name("topk"))
-      .toDF(groupCol, "topk")
-      .select(col(groupCol), posexplode(col("topk")).as(Seq("pos", "vk")))
-      .select(col(groupCol), (col("pos") + 1).cast("long").as("rnk"),
-        col("vk.v").as(valueCol), col("vk.id").as(idCol))
-  }
 
   /** Same top-k keyed by a LONG group id (no string cast), for
     * numeric-keyed rankers — the similarity operators rank millions

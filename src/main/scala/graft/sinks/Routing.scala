@@ -378,8 +378,8 @@ object Routing {
     // BOUNDED-CHUNK transactions with conflict retry: concurrent
     // per-partition MERGEs on one table can deadlock or fail
     // serialization even on disjoint keys — Derby escalates to
-    // page/table locks (observed live under the StreamingPerf probe
-    // at 20 concurrent writers), and PostgreSQL raises 40001/40P01
+    // page/table locks (observed live in the r11 streaming runs at
+    // 20 concurrent writers), and PostgreSQL raises 40001/40P01
     // under SSI or multi-row lock-order inversions. The standard
     // client contract for BOTH is: rollback and retry the
     // transaction. Each chunk (one buffered group of rows, bounded

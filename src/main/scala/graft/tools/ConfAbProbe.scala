@@ -67,13 +67,7 @@ object ConfAbProbe {
     // validate before any session spins up
     val confs = parseConfs(args(2))
     val sel = entries(args(3).split(',').toSeq)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.tuneFor(
-      SparkSession.builder().master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus),
-      sfDir, cpus.toInt
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.forMain(sfDir)
 
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     spark.sparkContext.addSparkListener(

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 import graft.GraftSession
 
@@ -34,13 +33,7 @@ object StageProbe {
     val sfDir = args(0)
     val sel = ConfAbProbe.entries(args(1).split(',').toSeq)
     val attempts = args.lift(2).map(_.toInt).getOrElse(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.tuneFor(
-      SparkSession.builder().master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus),
-      sfDir, cpus.toInt
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.forMain(sfDir)
 
     case class St(id: Int, name: String, tasks: Int, runMs: Long,
                   inputB: Long, shReadB: Long, shWriteB: Long,

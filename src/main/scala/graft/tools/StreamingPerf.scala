@@ -1,11 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.{GraftSession}
-import graft.etl.DedupIngest
+import graft.GraftSession
 import graft.ingest.KlineIngest
 import graft.ops.Similarity
 import graft.pipelines.KlinePipeline
@@ -17,23 +16,18 @@ import graft.streaming.Telemetry
   * proven, zero recorded rows/sec anywhere, for an engine whose
   * reference category IS a streaming pipeline).
   *
-  * Drives three resident pipelines at sustained rate-source input
-  * for a fixed wall-clock window each, with the [[Telemetry]]
-  * recorder as the measurement instrument — the same table an
-  * operator would read in production, so the probe measures what the
-  * observability surface actually reports, not a side channel:
+  * Drives resident pipelines at sustained rate-source input for a
+  * fixed wall-clock window each, with the [[Telemetry]] recorder as
+  * the measurement instrument — the same table an operator would
+  * read in production, so the probe measures what the observability
+  * surface actually reports, not a side channel. It drives the three
+  * pipelines the `perfbench` workloads do not (`perfbench`'s
+  * `kline_jdbc` and `doc_dedup` measure
+  * [[KlinePipeline.longtimeJdbc]] and
+  * [[graft.etl.DedupIngest.startIncremental]] open-loop):
   *
-  *   - `kline_jdbc` — the reference-parity flagship
-  *     ([[KlinePipeline.longtimeJdbc]]): parse → enrich → keyed
-  *     dedup → per-batch MERGE upsert into embedded Derby
-  *     (replay-idempotent sink; the reference's own job shape,
-  *     spark/streaming-longtime.py:148-154).
   *   - `routed_parquet` — [[Routing.routedParquet]]: enrich → one
   *     partitioned parquet write per batch with replay markers.
-  *   - `dedup_incremental` — [[DedupIngest.startIncremental]]:
-  *     checkpointed-Bloom exact-dedup admission, O(batch) per
-  *     trigger against a bootstrapped corpus (~5 % planted
-  *     duplicates in the feed).
   *
   * Per pipeline the probe reports: batches committed, input rows,
   * mean rows/sec over the window, p50/p95/max of the per-trigger
@@ -44,11 +38,11 @@ import graft.streaming.Telemetry
   * R sustains R with headroom; p95 ≪ the interval quantifies how
   * much.
   *
-  * r12 adds the two INDEX-MAINTENANCE pipelines whose O(batch) claim
-  * the 100 TB story rests on (r11 VERDICT #2), both with in-stream
-  * auto-compaction forced LOW (threshold 4 segments) so the one
-  * O(index) pause inside the otherwise O(batch) loop trips mid-window
-  * and lands in the per-trigger tail the probe reports:
+  * The two INDEX-MAINTENANCE pipelines, whose O(batch) claim the
+  * 100 TB story rests on, run with in-stream auto-compaction forced
+  * LOW (threshold 4 segments) so the one O(index) pause inside the
+  * otherwise O(batch) loop trips mid-window and lands in the
+  * per-trigger tail the probe reports:
   *
   *   - `ivfpq_append` — [[graft.etl.IndexIngest.startIvfPqAppend]]:
   *     frozen-model assign + encode + seg-overwrite append per batch.
@@ -63,9 +57,10 @@ import graft.streaming.Telemetry
   * folded, so the pause can be read against the trigger interval.
   *
   * Usage: `runMain graft.tools.StreamingPerf [durationSec]
-  * [klineRps] [routedRps] [dedupRps] [ivfpqRps] [dedupedBinRps]` —
-  * prints ONE JSON line.
-  * Defaults size the window so each pipeline commits ~20+ triggers.
+  * [routedRps] [ivfpqRps] [dedupedBinRps]` — prints ONE JSON line.
+  * `SPARK_GRAFT_STREAM_ONLY=name[,name…]` runs a subset, and
+  * `tools/run_ladder.sh <commit> <round> streaming` runs the
+  * sustained, saturated and long-window regimes SCALE.md records.
   */
 object StreamingPerf {
 
@@ -73,27 +68,17 @@ object StreamingPerf {
     val durationSec = args.headOption.map(_.toInt).getOrElse(30)
     // default rates target the SUSTAINABLE regime (zero lagging
     // after warm-up); pass higher rates to measure the saturation
-    // ceiling instead. kline_jdbc's ceiling is Derby's MERGE (the
-    // sandbox stand-in for the reference's PostgreSQL — a few
-    // thousand merged rows/sec single-node), not the Spark plan.
-    val klineRps = args.lift(1).map(_.toInt).getOrElse(2000)
-    val routedRps = args.lift(2).map(_.toInt).getOrElse(15000)
-    val dedupRps = args.lift(3).map(_.toInt).getOrElse(30000)
-    val ivfpqRps = args.lift(4).map(_.toInt).getOrElse(20000)
-    val dedupedBinRps = args.lift(5).map(_.toInt).getOrElse(10000)
+    // ceiling instead
+    val routedRps = args.lift(1).map(_.toInt).getOrElse(15000)
+    val ivfpqRps = args.lift(2).map(_.toInt).getOrElse(20000)
+    val dedupedBinRps = args.lift(3).map(_.toInt).getOrElse(10000)
     // SPARK_GRAFT_STREAM_ONLY=name[,name...] runs a subset — the
-    // deduped_binary re-evidence run (r12 VERDICT #2) needs a >=10
-    // batch window at its 30 s cadence (>=330 s), which the full
-    // five-pipeline suite should not all pay
+    // deduped_binary long window needs >=10 batches at its 30 s
+    // cadence (>=330 s), which the other pipelines should not pay
     val onlyPipes = sys.env.get("SPARK_GRAFT_STREAM_ONLY")
       .map(_.split(',').map(_.trim).toSet)
     def enabled(name: String): Boolean = onlyPipes.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.tune(
-      SparkSession.builder().master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.forMain(dataDir = "")
 
     val work = java.nio.file.Files
       .createTempDirectory("graft-streamperf").toString
@@ -160,25 +145,7 @@ object StreamingPerf {
         f""""lagging_batches":$lagging,"lagging_after_warmup":$laggingWarm${extraAfter()}}"""
     }
 
-    // 1. reference-parity flagship into the exactly-once JDBC sink
-    val props = new java.util.Properties()
-    // parse+enrich+stateful-dedup+MERGE costs ~1 s per trigger
-    // REGARDLESS of rows (state-store commit + JDBC round), so a 1 s
-    // cadence has zero headroom by construction; 2 s is still 15×
-    // tighter than the reference's own poll cycle
-    val klineTriggerMs = 2000L
-    val kline = if (!enabled("kline_jdbc")) "" else
-      measure("kline_jdbc", klineTriggerMs) { () =>
-      KlinePipeline.longtimeJdbc(
-          KlineIngest.simulatedStream(spark, rowsPerSecond = klineRps),
-          "jdbc:derby:memory:streamperf;create=true", "klines", props,
-          s"$work/cp-kline")
-        .queryName("kline_jdbc")
-        .trigger(Trigger.ProcessingTime(s"$klineTriggerMs milliseconds"))
-        .start()
-    }
-
-    // 2. routed partitioned-parquet sink (trigger overridden from the
+    // 1. routed partitioned-parquet sink (trigger overridden from the
     // builder's AvailableNow to a resident cadence). A partitioned
     // parquet commit costs ~1 s REGARDLESS of rows (file+marker+
     // footer work), so a 1 s cadence is borderline-lagging at any
@@ -195,36 +162,7 @@ object StreamingPerf {
         .start()
     }
 
-    // 3. incremental Bloom dedup admission: rate source dressed as
-    // documents with ~5 % planted duplicates (every 20th row shares
-    // one text), corpus bootstrapped first like production
-    import spark.implicits._
-    if (enabled("dedup_incremental")) DedupIngest.bootstrapCorpus(spark,
-      (0 until 100).map(i => (i.toLong, s"seed document $i"))
-        .toDF("doc_id", "text"),
-      s"$work/dedup-corpus", key = "text", tiebreaker = "doc_id")
-    val docsStream = spark.readStream.format("rate")
-      .option("rowsPerSecond", dedupRps.toString).load()
-      .select(col("value").as("doc_id"),
-        when(col("value") % 20 === 0, lit("the planted duplicate text"))
-          .otherwise(concat(lit("doc body "), col("value").cast("string"),
-            lit(" with a few filler words for shape")))
-          .as("text"))
-    // the Bloom-chain admission pays ~4-5 s of fixed per-trigger work
-    // (chain read + partitioned corpus/fingerprint writes) by design —
-    // its production cadence is tens of seconds, so it is judged
-    // against a 10 s trigger, not the klines' 1 s
-    val dedupTriggerMs = 10000L
-    val dedup = if (!enabled("dedup_incremental")) "" else
-      measure("dedup_incremental", dedupTriggerMs) { () =>
-      DedupIngest.startIncremental(docsStream, s"$work/dedup-corpus",
-        s"$work/cp-dedup", key = "text", tiebreaker = "doc_id",
-        expectedItems = 10000000L,
-        trigger = Trigger.ProcessingTime(s"$dedupTriggerMs milliseconds"),
-        queryName = Some("dedup_incremental"))
-    }
-
-    // 4 + 5: the index-maintenance pipelines (r11 VERDICT #2).
+    // 2 + 3: the index-maintenance pipelines.
     // Deterministic embedding stream: 64 floats HASH-keyed by
     // (row id, dim) via xxhash64, uniform in [-1, 1] — distinct ids
     // land near cosine 0, so the dedup pipeline's admission measures
@@ -269,7 +207,7 @@ object StreamingPerf {
       s""","segments_after":$nSegs,"index_rows":$nRows,"offline_compact_ms":$compactMs"""
     }
 
-    // 4. frozen-model IVF-PQ append (assign + encode + seg overwrite)
+    // 2. frozen-model IVF-PQ append (assign + encode + seg overwrite)
     val ivfpqDir = s"$work/ivfpq-idx"
     if (enabled("ivfpq_append"))
       Similarity.buildIvfPqIndex(seed, ivfpqDir, nlist = 16, m = 8, ksub = 16,
@@ -283,7 +221,7 @@ object StreamingPerf {
         autoCompactSegments = 4, queryName = Some("ivfpq_append"))
     }
 
-    // 5. composed dedup→binary pipeline (admission + index append,
+    // 3. composed dedup→binary pipeline (admission + index append,
     // exactly-once both stages). Banding sized for the BATCH scale
     // like any production deployment (the annParams(100k) regime,
     // 6 bands × 10 bits): the gate-scale default (8×4 = 16 buckets
@@ -299,8 +237,8 @@ object StreamingPerf {
         bands = 6, bitsPerBand = 10, stateBuckets = 32)
     // the composed admission pays a heavy fixed per-trigger floor
     // (banding join + cosine verify + three partitioned commits) —
-    // the product default cadence is 60 s; judged here at 30 s, the
-    // same judged-at-its-own-cadence rule as dedup_incremental's 10 s
+    // the product default cadence is 60 s; judged here at 30 s, its
+    // own cadence rather than the routed sink's 5 s
     val dedupedBinTriggerMs = 30000L
     val dedupedBin = if (!enabled("deduped_binary")) "" else
       measure("deduped_binary", dedupedBinTriggerMs,
@@ -310,17 +248,17 @@ object StreamingPerf {
         s"$work/cp-dedupedbin", bands = 6, bitsPerBand = 10,
         trigger = Trigger.ProcessingTime(s"$dedupedBinTriggerMs milliseconds"),
         autoCompactSegments = 4, queryName = Some("deduped_binary"),
-        // r14: the bucketed _sbands layout — the stored probe side
-        // stops exchanging per trigger (BucketedStateSpec pins the
-        // plan; ComposedProbe 0-vs-32 A/Bs the slope)
+        // the bucketed _sbands layout — the stored probe side stops
+        // exchanging per trigger (BucketedStateSpec pins the plan;
+        // SCALE.md's per-stage tables record the 0-vs-32 slope)
         stateBuckets = 32)
     }
 
     rec.stop()
     println(s"""{"metric":"streaming_perf","duration_s":$durationSec,""" +
-      s""""cpus":$cpus,""" +
-      s""""rates":{"kline_jdbc":$klineRps,"routed_parquet":$routedRps,"dedup_incremental":$dedupRps,"ivfpq_append":$ivfpqRps,"deduped_binary":$dedupedBinRps},""" +
-      s""""pipelines":{${Seq(kline, routed, dedup, ivfpq, dedupedBin)
+      s""""cpus":${spark.sparkContext.defaultParallelism},""" +
+      s""""rates":{"routed_parquet":$routedRps,"ivfpq_append":$ivfpqRps,"deduped_binary":$dedupedBinRps},""" +
+      s""""pipelines":{${Seq(routed, ivfpq, dedupedBin)
         .filter(_.nonEmpty).mkString(",")}}}""")
     spark.stop()
   }

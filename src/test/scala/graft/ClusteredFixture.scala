@@ -1,4 +1,4 @@
-package graft.tools
+package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -45,36 +45,5 @@ object ClusteredFixture {
       // qualifying rows evenly and never exercise that path)
       (id, emb, ((id % nClusters) % 10).toInt)
     }.toDF("vec_id", "embedding", "label")
-  }
-
-  /** Write `<outDir>/embeddings.parquet` in the testdata layout so
-    * every probe tool can point at the directory interchangeably
-    * with a `/root/testdata/sf*` one.
-    *
-    * Usage: runMain graft.tools.ClusteredFixture <outDir> <n> [dim]
-    *        [nClusters] [noise] [bgFrac] [seed]
-    */
-  def main(args: Array[String]): Unit = {
-    require(args.length >= 2,
-      "usage: ClusteredFixture <outDir> <n> [dim] [nClusters] [noise] [bgFrac] [seed]")
-    val outDir = args(0)
-    val n = args(1).toLong
-    val dim = args.lift(2).map(_.toInt).getOrElse(64)
-    val nClusters = args.lift(3).map(_.toInt).getOrElse(50)
-    val noise = args.lift(4).map(_.toDouble).getOrElse(0.35)
-    val bgFrac = args.lift(5).map(_.toDouble).getOrElse(0.1)
-    val seed = args.lift(6).map(_.toLong).getOrElse(42L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.GraftSession.tune(
-      SparkSession.builder().master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    frame(spark, n, dim, nClusters, noise, bgFrac, seed)
-      .write.mode("overwrite").parquet(s"$outDir/embeddings.parquet")
-    println(s"wrote $n x $dim clustered embeddings " +
-      s"(nClusters=$nClusters noise=$noise bgFrac=$bgFrac seed=$seed) " +
-      s"to $outDir/embeddings.parquet")
-    spark.stop()
   }
 }

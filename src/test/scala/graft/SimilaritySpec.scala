@@ -577,7 +577,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
   test("lshDeltaProbeDist: the refutation-backed constant and its mask arithmetic") {
     // r11 VERDICT #5 asked for a regime-derived radius (2 above the
     // 8-bit regime); it was implemented, measured per rung at each
-    // radius's own catalog bound (tools.AppendProbe lshdelta), and
+    // radius's own catalog bound (SCALE.md, "LSH delta probe radius"), and
     // REFUTED — radius-2 floor misses GROW with bits (below3 1/400 →
     // 8/1607 → 16/1139 at sf1/5/25) exactly as fixed-radius geometry
     // predicts. Pin the constant and the mask counts the evidence and
@@ -1059,12 +1059,12 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     // and (b) on an all-passing sample the safety quantile keeps a
     // small escalation reserve. Pinned on the clustered shape the
     // feature exists for.
-    val emb = graft.tools.ClusteredFixture
+    val emb = ClusteredFixture
       .frame(spark, n = 2000, dim = 32, nClusters = 10, noise = 0.35,
         bgFrac = 0.15, seed = 7L).localCheckpoint()
     // determinism under any partitioning: the generator is keyed by
     // vec_id, not by split (reruns/appends must see identical bytes)
-    val again = graft.tools.ClusteredFixture
+    val again = ClusteredFixture
       .frame(spark, n = 2000, dim = 32, nClusters = 10, noise = 0.35,
         bgFrac = 0.15, seed = 7L).repartition(7)
       .select("vec_id", "embedding")
@@ -1121,7 +1121,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     // fraction IS adaptiveEscalations' count at that margin, and the
     // verdict/break-even ARE the marginal-cost comparison (walls are
     // box-dependent, so the spec pins consistency, not magnitudes)
-    val emb = graft.tools.ClusteredFixture
+    val emb = ClusteredFixture
       .frame(spark, n = 1500, dim = 32, nClusters = 8, noise = 0.35,
         bgFrac = 0.15, seed = 11L).localCheckpoint()
     val dir = s"${System.getProperty("java.io.tmpdir")}/graft-ivfpq-advise"

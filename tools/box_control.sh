@@ -7,6 +7,8 @@
 # on untouched-entry inference because this wasn't scripted.)
 #
 # Usage: box_control.sh <prior_commit> <sf_dir> <out_json> [sentinels] [attempts]
+# Cores: SPARK_GRAFT_CPUS (default 32), so the control runs at the
+# rung's width.
 # The attempt policy is PASSED IN so the control runs the SAME policy
 # as the rung it will be compared against (r12 VERDICT "What's wrong"
 # #1: the sf25 rung recorded single-attempt walls while its control
@@ -23,7 +25,7 @@ if [ ! -d "$WT" ]; then
   git -C /root/repo worktree add --detach "$WT" "$COMMIT"
 fi
 cd "$WT"
-SPARK_GRAFT_SF_DIR="$SFDIR" SPARK_GRAFT_CPUS=32 \
+SPARK_GRAFT_SF_DIR="$SFDIR" SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
   SPARK_GRAFT_BENCH_ONLY="$SENT" \
   SPARK_GRAFT_BENCH_ATTEMPTS="$ATTEMPTS" \
   sbt -batch "runMain graft.Bench" 2>/dev/null \
