@@ -64,13 +64,15 @@ object Cdc {
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          mergeBatch(batch, path, key, seq, op, deleteOp, payload, nBuckets)
+        mergeBatch(batch, path, key, seq, op, deleteOp, payload, nBuckets)
       }
       .trigger(Trigger.AvailableNow())
 
   /** One merge step of [[streamSnapshot]] (also usable for batch
-    * incremental upserts). */
+    * incremental upserts). The affected-bucket collect is its
+    * emptiness check: a batch that touches no bucket returns right
+    * after the crash repair, reading no snapshot and writing no
+    * stage. */
   def mergeBatch(batch: DataFrame, path: String, key: Column, seq: Column,
                  op: Column, deleteOp: String, payload: Seq[(String, Column)],
                  nBuckets: Int): Unit = {
@@ -97,6 +99,7 @@ object Cdc {
       val affected = picked
         .select(pmod(hash(col("k")), lit(nBuckets)).as("b")).distinct()
         .collect().map(_.getInt(0)).sorted
+      if (affected.isEmpty) return
 
       val existing =
         if (fs.exists(root) && fs.listStatus(root).nonEmpty)

@@ -1,6 +1,6 @@
 package graft.pipelines
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.Row
 import graft.GraftSession.described
@@ -80,21 +80,31 @@ object KlinePipeline {
   /** One micro-batch of the JDBC flagship — exposed so the e2e spec
     * (and manual backfills) can drive the exact code path the stream
     * runs, including replaying a batch whose sink write landed but
-    * whose checkpoint commit did not. Its two Spark jobs are labelled
-    * `sink:nonempty` (the emptiness guard) and `sink:upsert`.
+    * whose checkpoint commit did not. Ensures the table on every call
+    * (the stream does it once per run), then runs the batch's one
+    * Spark job.
     */
   def upsertBatch(batch: DataFrame, jdbcUrl: String, table: String,
-                  props: java.util.Properties): Unit = {
-    val spark = batch.sparkSession
-    // the reference's per-batch guards (streaming-longtime.py:115-117):
-    // driver-side schema check, emptiness without a count
-    if (KlineIngest.hasRequiredColumns(batch) &&
-        !described(spark, "sink:nonempty")(batch.isEmpty)) {
+                  props: java.util.Properties): Unit =
+    // the reference's driver-side schema guard (streaming-longtime.py:115)
+    if (KlineIngest.hasRequiredColumns(batch)) {
       Routing.ensureTable(jdbcUrl, table, KlineDdl, props)
-      described(spark, "sink:upsert")(
-        Routing.upsertJdbc(batch, jdbcUrl, table, KlineKey, props))
+      upsert(batch, jdbcUrl, table, props)
     }
-  }
+
+  /** The batch's one Spark job, labelled `sink:upsert`. The reference
+    * also skips an empty batch (streaming-longtime.py:116-117); here
+    * the write itself is that check, because `Routing.upsertJdbc`
+    * opens no connection for a partition without rows. An emptiness
+    * probe of its own would be a second job that runs the trigger's
+    * whole plan — the dedup shuffle and state store included — again.
+    * A no-data trigger still runs this job: it is what commits the
+    * dedup state the watermark evicts.
+    */
+  private def upsert(batch: DataFrame, jdbcUrl: String, table: String,
+                     props: java.util.Properties): Unit =
+    described(batch.sparkSession, "sink:upsert")(
+      Routing.upsertJdbc(batch, jdbcUrl, table, KlineKey, props))
 
   /** Full long-time job into the exactly-once JDBC sink: parse →
     * enrich → keyed dedup → per-batch MERGE upsert on [[KlineKey]],
@@ -110,12 +120,26 @@ object KlinePipeline {
   def longtimeJdbc(kafkaShaped: DataFrame, jdbcUrl: String, table: String,
                    props: java.util.Properties, checkpointDir: String,
                    dedup: Boolean = true,
-                   chaosAfterSink: Long => Unit = _ => ()): DataStreamWriter[Row] =
+                   chaosAfterSink: Long => Unit = _ => ()): DataStreamWriter[Row] = {
+    // the table DDL runs once per started query, on its first trigger,
+    // not once per trigger. Every run of a query executes its batches
+    // in a session of its own (the engine clones one at start), so a
+    // session seen before is a trigger of a run that already ensured
+    // the table; weak keys let a stopped run's session be collected
+    val ensured = java.util.Collections.synchronizedSet(java.util.Collections
+      .newSetFromMap(new java.util.WeakHashMap[SparkSession, java.lang.Boolean]))
     enriched(kafkaShaped, dedup).writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        upsertBatch(batch, jdbcUrl, table, props)
+        if (KlineIngest.hasRequiredColumns(batch)) {
+          if (!ensured.contains(batch.sparkSession)) {
+            Routing.ensureTable(jdbcUrl, table, KlineDdl, props)
+            ensured.add(batch.sparkSession)
+          }
+          upsert(batch, jdbcUrl, table, props)
+        }
         chaosAfterSink(batchId)
       }
+  }
 }

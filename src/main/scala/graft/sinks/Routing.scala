@@ -112,6 +112,15 @@ object Routing {
     * micro-batch with one partitioned write (sink_foreach_batch +
     * sink_jdbc_append semantics, minus the per-group job storm).
     * Caller starts it: `routedParquet(ds, path, cp).start()`.
+    *
+    * One Spark job per micro-batch: the partitioned write. An empty
+    * batch (say, one the dedup stage reduced to nothing) appends no
+    * data file — a `partitionBy` write of no rows leaves only
+    * `_SUCCESS` — so it needs no `isEmpty` probe, which would run the
+    * batch's plan, dedup state store included, a second time (pinned
+    * in `StreamingSpec`). With `keys` empty the write is not
+    * partitioned, and Spark then writes one empty part file carrying
+    * the schema; the read-back is unchanged either way.
     */
   def routedParquet(enriched: DataFrame, path: String, checkpointDir: String,
                     keys: Seq[String] = Seq("coin", "interval"))
@@ -143,7 +152,7 @@ object Routing {
           s"$path/_committed_batch_$batchId")
         val outFs = org.apache.hadoop.fs.FileSystem.get(
           new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(marker) && !outFs.exists(legacy) && !batch.isEmpty) {
+        if (!fs.exists(marker) && !outFs.exists(legacy)) {
           writePartitioned(batch, path, keys)
           fs.create(marker, true).close()
         }
@@ -318,6 +327,16 @@ object Routing {
     * below was measured before the index existed and is kept, not
     * re-measured.
     *
+    * Writers: the reduced batch is hash-shuffled by key into exactly
+    * `maxConnections` partitions (one on Derby), one writer each, so a
+    * key's rows meet in one transaction. On PostgreSQL that is
+    * `maxConnections` writers (8 by default) whatever the input's
+    * partition count. A writer connects per chunk of
+    * rows, so an empty batch or partition opens no connection and
+    * writes nothing: the write is its own emptiness check, and a
+    * caller needs no `isEmpty` probe — a second job over the input's
+    * whole plan — before it (pinned in `JdbcSpec`).
+    *
     * A batch may carry several rows for one key; Spark guarantees no
     * intra-partition order after a repartition, so "last row wins"
     * would be nondeterministic. The batch is therefore reduced to ONE
@@ -355,14 +374,19 @@ object Routing {
       .select(cols.map(col): _*)
     // co-locate each key in ONE partition: concurrent per-partition
     // transactions merging the same key would race (nondeterministic
-    // winner, lock-timeout risk). Then BOUND the writer count —
+    // winner, lock-timeout risk). And BOUND the writer count —
     // `maxConnections` concurrent transactions against ONE database
     // endpoint, not one per shuffle partition: a single RDBMS gains
     // nothing past a few writers and loses hard to lock contention
     // (Derby serializes behind 60 s table-lock waits at ~20 writers —
     // measured live; PG deadlock probability grows with writer
-    // count). coalesce (no shuffle) merges whole partitions, so
-    // per-key co-location survives.
+    // count). One hash shuffle into `conns` partitions does both.
+    // It must be a shuffle: a `coalesce` over a key repartition loses
+    // the repartition whenever the input is already hash-partitioned
+    // by the keys (the groupBy's output, or a foreachBatch frame over
+    // a keyed dedup), so the coalesce folds everything upstream into
+    // its own `conns` tasks — on Derby one task running the whole
+    // state-store stage and aggregation of a streaming trigger.
     // Derby clamps to ONE writer regardless of the cap: its lock
     // manager escalates row locks to table locks under concurrent
     // MERGE, so extra writers buy only wait cycles (observed: the
@@ -373,8 +397,7 @@ object Routing {
     val conns =
       if (jdbcUrl.startsWith("jdbc:derby")) 1
       else math.max(1, maxConnections)
-    val byKey = oneRow.repartition(keyCols.map(col): _*)
-      .coalesce(conns)
+    val byKey = oneRow.repartition(conns, keyCols.map(col): _*)
     // BOUNDED-CHUNK transactions with conflict retry: concurrent
     // per-partition MERGEs on one table can deadlock or fail
     // serialization even on disjoint keys — Derby escalates to

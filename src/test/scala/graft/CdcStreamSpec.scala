@@ -4,6 +4,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 import graft.ops.Cdc
 
 /** Streaming CDC snapshot maintenance (Cdc.streamSnapshot): changelog
@@ -141,5 +142,31 @@ class CdcStreamSpec extends AnyFunSuite with SparkTestBase {
     merge(Seq((2L, 3L, "U", 20.0)))
     val snap = Cdc.snapshot(spark, path).select("k").as[Long].collect()
     assert(snap.toSeq === Seq(2L))
+  }
+
+  test("an empty batch leaves the snapshot untouched and no stage behind") {
+    val dir = Files.createTempDirectory("cdcsnap6").toString
+    val path = s"$dir/snap"
+    def merge(rows: Seq[(Long, Long, String, Double)]): Unit =
+      Cdc.mergeBatch(rows.toDF("key", "seq", "op", "v"), path,
+        col("key"), col("seq"), col("op"), "D", Seq("v" -> col("v")), 4)
+    merge(Seq((1L, 1L, "U", 10.0), (2L, 1L, "U", 20.0)))
+    // every file under the snapshot's parent, stage siblings included
+    def files(): Seq[(String, Long, Long)] = {
+      val root = java.nio.file.Paths.get(dir)
+      val walk = Files.walk(root)
+      try walk.iterator().asScala.filter(Files.isRegularFile(_)).map(f =>
+        (root.relativize(f).toString, Files.size(f),
+          Files.getLastModifiedTime(f).toMillis)).toSeq.sorted
+      finally walk.close()
+    }
+    val before = files()
+    assert(before.exists(_._1.endsWith(".parquet")))
+    merge(Nil)
+    val after = files()
+    assert(after === before)
+    assert(!after.exists(_._1.contains(".tmp")))
+    assert(!Files.exists(java.nio.file.Paths.get(dir, ".snap.tmp")))
+    assert(Cdc.snapshot(spark, path).count() === 2L)
   }
 }

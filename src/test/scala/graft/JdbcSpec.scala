@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 import graft.sinks.Routing
 
 /** Reference JDBC parity (§2.1 src_jdbc_full/src_jdbc_pushdown, §2.2
@@ -202,5 +203,51 @@ class JdbcSpec extends AnyFunSuite with SparkTestBase {
     val selfRef = new java.sql.SQLException("self", "XX000")
     selfRef.setNextException(selfRef)
     assert(!isRetryableConflict(selfRef))
+  }
+
+  test("an empty batch opens no database connection") {
+    // no create=true and no such database: any getConnection throws
+    val nowhere = "jdbc:derby:memory:graftNoSuchDb"
+    intercept[java.sql.SQLException](
+      java.sql.DriverManager.getConnection(nowhere, props).close())
+    val empty = Seq.empty[(String, Long, Double)].toDF("coin", "ts", "price").repartition(4)
+    Routing.upsertJdbc(empty, nowhere, "nowhere", Seq("coin"), props)
+  }
+
+  test("upsert writer layout: the input's partitions stay wide, then one shuffle to the writers") {
+    Routing.ensureTable(url, "layout",
+      "coin VARCHAR(16), ts BIGINT, price DOUBLE", props)
+    // input already hash-partitioned by the key at the session's
+    // shuffle width, as a foreachBatch frame over a keyed dedup is: a
+    // key repartition under a coalesce would be planned away here, and
+    // the coalesce would run the aggregation in a single task
+    val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    assume(width == 4, s"shuffle width $width")
+    val b = spark.range(0, 40, 1, 1)
+      .select((col("id") % 10).cast("string").as("coin"), col("id").as("ts"),
+        col("id").cast("double").as("price"))
+      .repartition(width, col("coin"))
+    val stages = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(
+          s: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        if (Option(s.properties).exists(_.getProperty("spark.job.description") == "layout"))
+          stages.put(s.stageInfo.stageId, s.stageInfo.numTasks)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try GraftSession.described(spark, "layout")(
+      Routing.upsertJdbc(b, url, "layout", Seq("coin"), props, orderCol = Some("ts")))
+    finally spark.sparkContext.removeSparkListener(listener)
+    val rows = spark.read.jdbc(url, "layout", props).collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSet
+    assert(rows == (0 until 10).map(i => (i.toString, 30L + i)).toSet)
+    // the listener bus is asynchronous; the last stage is the writers'
+    def byStage = stages.asScala.toSeq.sorted
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while (!(byStage.exists(_._2 == width) && byStage.last._2 == 1) &&
+      System.nanoTime() < deadline) Thread.sleep(20)
+    assert(byStage.exists(_._2 == width), s"no $width-task stage: $byStage")
+    // Derby: one writer
+    assert(byStage.last._2 == 1, s"writer stage: $byStage")
   }
 }

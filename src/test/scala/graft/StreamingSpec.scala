@@ -592,6 +592,41 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     assert(back.count() == 2)
   }
 
+  test("routed sink: a batch the dedup reduces to nothing appends no data file") {
+    implicit val ctx = spark.sqlContext
+    val ms = MemoryStream[String]
+    val out = tmp("routed-empty-out"); val cp = tmp("routed-empty-cp")
+    val t0 = 1704067200000L
+    def writer = graft.pipelines.KlinePipeline.longtime(
+      ms.toDF().select(col("value").cast("binary").as("value")), out, cp)
+    def dataFiles(): Set[(String, Long)] = {
+      val root = java.nio.file.Paths.get(out)
+      val walk = Files.walk(root)
+      import scala.jdk.CollectionConverters._
+      try walk.iterator().asScala
+        .filter(_.getFileName.toString.startsWith("part-"))
+        .map(f => (root.relativize(f).toString, Files.size(f))).toSet
+      finally walk.close()
+    }
+    def readBack(): Set[String] =
+      spark.read.parquet(out).collect().map(_.mkString("|")).toSet
+
+    ms.addData(klineJson("BTC", "1m", t0), klineJson("ETH", "1m", t0))
+    val q1 = writer.start()
+    try q1.awaitTermination(60000) finally q1.stop()
+    val files = dataFiles()
+    val rows = readBack()
+    assert(files.nonEmpty && rows.size == 2)
+
+    // a re-delivery of both bars: the batch runs and dedups to no row
+    ms.addData(klineJson("BTC", "1m", t0), klineJson("ETH", "1m", t0))
+    val q2 = writer.start()
+    try q2.awaitTermination(60000) finally q2.stop()
+    assert(q2.recentProgress.exists(_.numInputRows == 2), "the duplicate batch never ran")
+    assert(dataFiles() == files, "an empty append added a data file")
+    assert(readBack() == rows)
+  }
+
   test("reference destination naming preserved for JDBC routing") {
     assert(Routing.destName("BTCUSDC", "1m") == ("source_btcusdc_db", "table_1m"))
     assert(Routing.destName(null, "1h") == ("source_null_db", "table_1h"))
